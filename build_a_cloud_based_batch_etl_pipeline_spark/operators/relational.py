@@ -38,7 +38,6 @@ from .util import r2, r4, rbin, t, ts
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
-    bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary: scan -> filter -> 8-agg hash
@@ -78,7 +77,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l_orderkey
     LIMIT 10
     """,
-    bench=True,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-shaped: 3-way join + grouped agg + deterministic top-10.
@@ -122,7 +120,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_name
     ORDER BY revenue DESC, n_name
     """,
-    bench=True,
 )
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-shaped: star join through supplier->nation->region with the
@@ -156,7 +153,6 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    bench=True,
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6-shaped: pure scan+filter+single agg. All four predicates
@@ -191,7 +187,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey
     LIMIT 20
     """,
-    bench=True,
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10-shaped: returned-item revenue per customer, top 20."""

@@ -16,7 +16,10 @@ bucket, so the join is an equi-join whose fan-out tracks bucket occupancy,
 tunable via bits/tables) and IVF (bucket = nearest centroid from a small
 codebook, probe-n on the query side). Vector math is built-in
 zip_with/aggregate folds in whole-stage codegen, or Arrow-batched BLAS in
-the brute-force scorer — no per-row Python anywhere. Recall properties:
+the brute-force scorer — no per-row Python anywhere. Every exact and ANN
+scorer is a thin Spark wrapper over the pure-numpy kernels in
+vector_kernels.py (normalize, ADC lookup tables and scores, and the one
+(-score, id) top-k tie contract). Recall properties:
 tests/test_similarity.py.
 """
 
@@ -37,6 +40,7 @@ from .util import (
     spread_small_input,
     t,
 )
+from . import vector_kernels as vk
 
 _DIM = 64
 
@@ -50,7 +54,7 @@ def _decode_hex_codes(hex_codes):
     """(n, _PQ_M) uint8 array from a sequence of fixed-width hex code
     strings via ONE bulk fromhex — the per-row bytes.fromhex loop this
     replaces was pure Python overhead on the index-load path (guide
-    §4.2). The reshape pins the EXPECTED width (ADVICE r16): with
+    §4.2). The reshape pins the EXPECTED width: with
     mixed-width rows (corrupt or mixed-version artifact) a reshape to
     (n, -1) could still divide cleanly and silently misalign every
     subsequent row's codes, where this raises."""
@@ -76,13 +80,13 @@ def _parquet_num_rows(path: str, spark: SparkSession | None = None) -> int | Non
     partitioned table nests part files under key=value subdirectories,
     and a top-level-only listing would return an empty file list whose
     sum() of 0 sails under the index cap and defeats the fail-fast
-    guard (ADVICE r3).
+    guard.
 
     Local paths use the pyarrow fast path; a non-local path (object
     store / `file:` URI) falls back to the Hadoop FileSystem walk +
-    the bundled parquet-hadoop footer reader when `spark` is given
-    (r13: without the fallback, every object-store table read None and
-    silently degraded the fail-fast cap to the bounded limit-collect)."""
+    the bundled parquet-hadoop footer reader when `spark` is given, so
+    an object-store table keeps the fail-fast cap instead of degrading
+    to the bounded limit-collect."""
     import os
 
     try:
@@ -125,16 +129,15 @@ def _table_fingerprint(path: str, spark: SparkSession | None = None) -> str:
     names + sizes + mtimes, hashed. O(files) driver-side listing —
     the same walk the footer guard already does — so memoization keyed
     on it cannot serve stale state after the table is rewritten or
-    regenerated within one Spark application (ADVICE r5). 'missing'
-    for a path with no parquet files.
+    regenerated within one Spark application. 'missing' for a path
+    with no parquet files.
 
     Local paths keep the original os.walk listing (byte-identical
     fingerprints to earlier rounds — persisted artifacts stay valid);
     non-local paths fall back to the Hadoop FileSystem walk when
-    `spark` is given (r13: an object-store table previously
-    fingerprinted as 'missing' — EVERY such table collided on one
-    artifact directory, so a stale artifact could be served across
-    different corpora; now 'missing' means genuinely absent)."""
+    `spark` is given, so 'missing' means genuinely absent: were every
+    object-store table 'missing', they would all share one artifact
+    directory and a stale artifact could be served across corpora."""
     import hashlib
     import os
 
@@ -311,51 +314,74 @@ def embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering is bit-deterministic across engines. This is the ANN ground
     truth; embed_ann_lsh is the sub-quadratic path.
     """
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    ids, mat_n = _collect_bounded_index(
+        spark, sf_dir, emb, "embed_cosine_topk",
+        "Use the sub-quadratic ANN operators embed_ann_lsh / embed_ann_ivf "
+        "for unbounded corpora.",
+    )
+    return _exact_cosine_stream(spark, emb, ids, mat_n, len(ids), k=5)
+
+
+def _collect_bounded_index(
+    spark: SparkSession, sf_dir: str, df: DataFrame, who: str, alternative: str
+):
+    """(ids, L2-normalized float64 matrix) of the (vec_id, embedding) rows
+    of `df`, the bounded index side every exact scorer broadcasts.
+
+    Brute force is O(|Q| x |X| x d), so the index side must be the
+    bounded one: the row cap is checked against the embeddings table's
+    parquet FOOTERS driver-side (no Spark job), and an over-cap corpus
+    fails fast, naming `who` and the scale path `alternative`, instead
+    of collecting to the driver. Unreadable footers (non-parquet source)
+    degrade to a bounded limit-collect."""
+    import numpy as np
+
+    n_rows = _parquet_num_rows(table_path(sf_dir, "embeddings"), spark)
+    if n_rows is not None and n_rows <= _MAX_INDEX_ROWS:
+        rows = df.collect()
+    else:
+        rows = df.limit(_MAX_INDEX_ROWS + 1).collect()
+    if len(rows) > _MAX_INDEX_ROWS:
+        raise ValueError(
+            f"{who} is the exact bounded-index baseline: index side exceeds "
+            f"the {_MAX_INDEX_ROWS}-row cap "
+            f"(~{_MAX_INDEX_ROWS * _DIM * 8 // 2**20} MiB broadcast). "
+            f"{alternative}"
+        )
+    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    return ids, vk.normalize(mat)
+
+
+_COSINE_SCHEMA = "qid long, nid long, cosine double"
+
+
+def _exact_cosine_stream(
+    spark: SparkSession,
+    q: DataFrame,
+    ids,
+    mat_n,
+    n_queries: int | None,
+    k: int | None = None,
+    tau: float | None = None,
+) -> DataFrame:
+    """Exact rounded-cosine neighbors of every (vec_id, embedding) row of
+    `q` against the broadcast bounded index (ids, mat_n): its top-k under
+    (-cosine, nid), or, with `tau`, every pair at cosine >= tau. Self
+    pairs (nid == qid) never match.
+
+    Each Arrow batch of queries is scored with ONE BLAS matmul against
+    the broadcast matrix, then rounded to 4dp before selection, so ties
+    break on the rounded value exactly as the oracles do. A one-split
+    query input is spread over at most ceil(n_queries / 256) tasks
+    (util.spread_small_input); per-query results never depend on the
+    partitioning."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    # Index side: collected once and broadcast to every executor as a dense
-    # float64 matrix; each Arrow batch of queries is then scored with ONE
-    # BLAS matmul instead of a 64-element expression fold per pair (~50x
-    # faster). Brute force is inherently O(N*M*d), so the index side must
-    # be the bounded one — the row-count cap is checked against the parquet
-    # FOOTERS driver-side (milliseconds, zero Spark jobs; a CollectLimit
-    # guard job measured ~2x the cost of the plain collect it guards), and
-    # an unbounded corpus fails fast instead of OOMing the driver. When
-    # footers are unreadable (non-parquet source) it degrades to the
-    # bounded limit-collect. For unbounded corpora the scale path is
-    # LSH/IVF bucketing (embed_ann_lsh / embed_ann_ivf) with identical
-    # plumbing.
-    n_index = _parquet_num_rows(table_path(sf_dir, "embeddings"), spark)
-    if n_index is not None and n_index <= _MAX_INDEX_ROWS:
-        index_rows = emb.collect()
-    else:
-        index_rows = emb.limit(_MAX_INDEX_ROWS + 1).collect()
-    if len(index_rows) > _MAX_INDEX_ROWS:
-        raise ValueError(
-            f"embed_cosine_topk is the exact bounded-index baseline: index "
-            f"side exceeds the {_MAX_INDEX_ROWS}-row cap "
-            f"(~{_MAX_INDEX_ROWS * _DIM * 8 // 2**20} MiB broadcast). Use "
-            f"the sub-quadratic ANN operators embed_ann_lsh / embed_ann_ivf "
-            f"for unbounded corpora."
-        )
-    ids = np.array([r.vec_id for r in index_rows], dtype=np.int64)
-    mat = np.array([r.embedding for r in index_rows], dtype=np.float64)
-    mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    # One broadcast, not two: each sc.broadcast is a driver->executor
-    # round trip paid per query invocation.
+    # one broadcast, not two: each is a driver->executor round trip
     b_index = spark.sparkContext.broadcast((ids, mat_n))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
 
     def score(batches):
         nids, nmat = b_index.value
@@ -363,29 +389,26 @@ def embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-            sims = np.round(qn @ nmat.T, 4)
-            qids = pdf["vec_id"].to_numpy()
-            res_q, res_n, res_c = [], [], []
-            for i, qid in enumerate(qids):
-                mask = nids != qid
-                row, cand = sims[i][mask], nids[mask]
-                # deterministic order: cosine desc, then nid asc
-                order = np.lexsort((cand, -row))[:5]
-                res_q.extend([qid] * len(order))
-                res_n.extend(cand[order].tolist())
-                res_c.extend(row[order].tolist())
-            yield pd.DataFrame({"qid": res_q, "nid": res_n, "cosine": res_c})
+            sims = np.round(vk.normalize(q) @ nmat.T, 4)
+            qids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            if tau is not None:
+                rows, pos = np.nonzero(
+                    (sims >= tau) & (nids[None, :] != qids[:, None])
+                )
+            else:
+                picks = [
+                    vk.topk_by_score_then_id(sims[i], nids, k, exclude=qid)
+                    for i, qid in enumerate(qids)
+                ]
+                rows = np.repeat(np.arange(len(qids)), [len(p) for p in picks])
+                pos = np.concatenate(picks)
+            yield pd.DataFrame(
+                {"qid": qids[rows], "nid": nids[pos], "cosine": sims[rows, pos]}
+            )
 
-    # The fixture is one small parquet file = one input split; without an
-    # explicit repartition the whole matmul would run as a single task.
-    # 4 tasks parallelizes the scoring while capping the number of Python
-    # workers to spin up (worker startup, not the BLAS matmul, dominates
-    # at test scale; measured sweep: 1 part 0.67s, 2 0.55s, 4 0.42s,
-    # 8 0.45s, 16 0.46s). At real scale file splits provide parallelism
-    # natively and this repartition is a cheap rebalance.
-    q = emb.repartition(min(4, spark.sparkContext.defaultParallelism))
-    return q.mapInPandas(score, out_schema)
+    return spread_small_input(q, "vec_id", n_rows=n_queries).mapInPandas(
+        score, _COSINE_SCHEMA
+    )
 
 
 @query(
@@ -1002,7 +1025,6 @@ def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle was half the query's bytes for no information.
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     assigned = blas_pair_scores(
         emb.crossJoin(F.broadcast(cent)).select("vec_id", "embedding", "cl", "centroid"),
@@ -1045,14 +1067,6 @@ def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # <= NPROBE*5 in-bucket winners per query. In-bucket ordering uses
     # the SAME (rounded cosine desc, nid) key as the final window, so
     # the two-phase selection is exact.
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
     def bucket_topk(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
@@ -1063,19 +1077,15 @@ def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if not len(qpdf) or not len(ipdf):
             return empty
-        Q = np.array(list(qpdf["ea"]), dtype=np.float64)
-        X = np.array(list(ipdf["eb"]), dtype=np.float64)
-        Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-        Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-        sims = np.round(Qn @ Xn.T, 4)
+        Q = vk.normalize(np.array(list(qpdf["ea"]), dtype=np.float64))
+        X = vk.normalize(np.array(list(ipdf["eb"]), dtype=np.float64))
+        sims = np.round(Q @ X.T, 4)
         qid = qpdf["qid"].to_numpy()
         nid = ipdf["nid"].to_numpy()
-        sims[qid[:, None] == nid[None, :]] = -np.inf  # self-pairs out
-        k = min(5, sims.shape[1])
         frames = []
         for r in range(len(qid)):
-            order = np.lexsort((nid, -sims[r]))[:k]
-            keep = order[np.isfinite(sims[r][order])]
+            top = vk.topk_by_score_then_id(sims[r], nid, 5, exclude=qid[r])
+            keep = top[np.isfinite(sims[r][top])]
             frames.append(
                 pd.DataFrame(
                     {"qid": qid[r], "nid": nid[keep], "cosine": sims[r][keep]}
@@ -1086,7 +1096,7 @@ def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         qv.groupBy("bucket")
         .cogroup(ixv.groupBy("b_ix"))
-        .applyInPandas(bucket_topk, out_schema)
+        .applyInPandas(bucket_topk, _COSINE_SCHEMA)
     )
     w2 = W.partitionBy("qid").orderBy(F.col("cosine").desc(), "nid")
     return (
@@ -1264,14 +1274,14 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
 
     Memoized per (applicationId, sf_dir, table fingerprint) via
     util.memo_once (one lifecycle discipline for all driver-side
-    artifact memos, VERDICT r5 item 8) — codebooks are a trained
+    artifact memos) — codebooks are a trained
     artifact, deterministic given the corpus (fixed k-means init, no
     RNG), and the four PQ queries share them in a warm session instead
     of re-running driver k-means per invocation. The fingerprint (file
     names + sizes + mtimes, `_table_fingerprint`) makes the memo
     content-addressed: rewriting or regenerating the embeddings table
     within one application invalidates the entry instead of silently
-    serving stale codes (ADVICE r5)."""
+    serving stale codes."""
     from .util import memo_once
 
     fp = _table_fingerprint(table_path(sf_dir, "embeddings"), spark)
@@ -1439,24 +1449,21 @@ def _adc_topk_stream(
     """Chunked flat-ADC top-k scoring of a query stream against a
     PQ-coded index — the scorer shared by embed_ann_pq (session-trained
     artifacts) and embed_ann_pq_indexed (artifacts loaded from the
-    persisted index tables), so the two paths cannot drift. See
-    embed_ann_pq's docstring for the chunking/tie contract."""
-    import numpy as np
-    from pyspark.sql import types as T
+    persisted index tables), so the two paths cannot drift.
 
-    # parallelize a one-split query fixture across cores, capped by the
-    # caller-known query count so a tiny batch is not shredded into
-    # core-count crumbs (real-scale inputs are already split; per-query
-    # scoring is partition-invariant)
-    emb = spread_small_input(emb, "vec_id", n_rows=n_queries)
+    The index is scored in columns of _ADC_CHUNK vectors: under the
+    (-score, nid) total order a global top-k element is inside its own
+    chunk's top-(k+1) (k+1 so the self row can be dropped later), so
+    merging per-chunk winners loses nothing and the output is identical
+    for every chunk size. n_queries (the caller-known query count) sizes
+    the spread of a one-split query input; None keeps its partitioning."""
+    import numpy as np
+
+    if n_queries is not None:
+        emb = spread_small_input(emb, "vec_id", n_rows=n_queries)
+    # read on the driver: the closure carries this value to the workers
+    chunk = _ADC_CHUNK
     b_all = spark.sparkContext.broadcast((books, ids, codes))
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("adc_score", T.DoubleType()),
-        ]
-    )
 
     def score(batches):
         import pandas as pd
@@ -1465,55 +1472,33 @@ def _adc_topk_stream(
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
+            q = vk.normalize(np.array(list(pdf["embedding"]), dtype=np.float64))
             qids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # LUT[b, m, k] = <q_b[m], codeword k of subspace m>
-            lut = np.einsum(
-                "bms,mks->bmk",
-                q.reshape(len(q), _PQ_M, _PQ_SUB),
-                bk,
-            )
-            # scores[b, n] = sum_m LUT[b, m, codes[n, m]], computed per
-            # index chunk: under the (-score, nid) total order, a global
-            # top-k element is inside its own chunk's top-(k+1) (k+1 so
-            # the self row can be dropped later), so merging per-chunk
-            # winners loses nothing. Selection is a STABLE argsort of
-            # -score — positions ascend with nid (ids are sorted at fit
-            # time), so score ties resolve to the smallest nid in every
-            # chunk, and the output is identical for every _ADC_CHUNK
-            # setting (argpartition would keep an arbitrary tied subset
-            # at the boundary).
+            lut = vk.adc_lut(q, bk)
             cand_pos, cand_sc = [], []
-            for lo in range(0, len(index_ids), _ADC_CHUNK):
-                hi = min(lo + _ADC_CHUNK, len(index_ids))
-                chunk = np.zeros((len(q), hi - lo))
-                for m in range(_PQ_M):
-                    chunk += lut[:, m, index_codes[lo:hi, m]]
-                kk = min(k + 1, hi - lo)
-                top = np.argsort(-chunk, axis=1, kind="stable")[:, :kk]
+            for lo in range(0, len(index_ids), chunk):
+                hi = min(lo + chunk, len(index_ids))
+                sc = vk.adc_scores(lut, index_codes[lo:hi])
+                top = vk.topk_by_score_then_id(sc, index_ids[lo:hi], k + 1)
                 cand_pos.append(top + lo)
-                cand_sc.append(np.take_along_axis(chunk, top, axis=1))
+                cand_sc.append(np.take_along_axis(sc, top, axis=1))
             pos = np.concatenate(cand_pos, axis=1)
             sc = np.concatenate(cand_sc, axis=1)
             out_q, out_n, out_s = [], [], []
             for bi in range(len(q)):
-                s = sc[bi].copy()
-                nids = index_ids[pos[bi]]
-                s[nids == qids[bi]] = -np.inf
-                # candidates are few (nchunks * (k+1)); full (-score,
-                # nid) order, then take k — same tie contract as above
-                order = np.lexsort((nids, -s))[: min(k, s.size)]
-                order = order[s[order] > -np.inf]
-                out_q.extend([qids[bi]] * len(order))
-                out_n.extend(nids[order])
-                out_s.extend(np.round(s[order], 4))
+                s, nids = sc[bi], index_ids[pos[bi]]
+                top = vk.topk_by_score_then_id(s, nids, k, exclude=qids[bi])
+                # a zero query vector scores NaN everywhere: no neighbors
+                top = top[s[top] > -np.inf]
+                out_q.extend([qids[bi]] * len(top))
+                out_n.extend(nids[top])
+                out_s.extend(np.round(s[top], 4))
             yield pd.DataFrame(
                 {"qid": out_q, "nid": np.array(out_n, dtype=np.int64),
                  "adc_score": out_s}
             )
 
-    return emb.mapInPandas(score, out_schema)
+    return emb.mapInPandas(score, "qid long, nid long, adc_score double")
 
 
 _IVFPQ_NLIST = 16
@@ -1523,8 +1508,7 @@ _IVFPQ_NPROBE = 3
 # each epoch partition) is written partitioned by
 # list_bucket = list_id % _PQ_LIST_BUCKETS, so a sharded serve whose
 # probe set is sparse (nprobe * |Q| << nlist) prunes unprobed buckets
-# at the PARTITION level — the scan never opens their files (VERDICT
-# r14 item 2: SCALE.md claimed this; now the layout delivers it). A
+# at the PARTITION level — the scan never opens their files. A
 # bucket, not raw list_id, because production nlist scales with the
 # corpus (the nlist ~ N rule) and one directory per inverted list
 # would melt the file listing; 16 buckets bounds directory fan-out
@@ -1584,63 +1568,60 @@ def _ivf_adc_topk_stream(
     assign,
     k: int = 5,
     index_mask=None,
+    index_labels=None,
     nprobe: int | None = None,
     n_queries: int | None = None,
 ) -> DataFrame:
     """IVF-routed ADC top-k scoring — the scorer shared by
     embed_ann_ivf_pq (session-trained artifacts),
-    embed_ann_ivf_pq_indexed (artifacts loaded from the persisted index
-    tables, including the stored per-vector list assignment),
-    embed_ann_join_ivf_pq (two-corpus join: index_mask restricts the
-    candidate side to the index corpus), and embed_ann_filtered_ivf_pq
-    (metadata predicate as the mask), so the paths cannot drift.
+    embed_ann_ivf_pq_indexed (persisted artifacts, including the stored
+    per-vector list assignment), embed_ann_join_ivf_pq (index_mask
+    restricts the candidates to the index corpus),
+    embed_ann_filtered_ivf_pq (metadata predicate as the mask) and
+    embed_ann_same_label_ivf_pq (per-query label filter), so the paths
+    cannot drift.
 
-    index_mask: optional bool array aligned to `ids`; when given, only
-    masked-True index vectors are eligible neighbors — applied once per
-    task while grouping inverted-list members, so the per-query path is
-    unchanged.
+    index_mask: optional bool array aligned to `ids`; only masked-True
+    index vectors are eligible neighbors. It folds into the
+    once-per-task inverted-list grouping, so the per-query path pays
+    nothing for it.
+
+    index_labels: optional int array aligned to `ids`; when given, the
+    query frame carries a `label` column and each query only sees
+    candidates with its own label (one vectorized compare per query).
 
     nprobe: probe-count override (default _IVFPQ_NPROBE). Masked
     searches probe MORE lists to keep the eligible-candidate pool at
     the unmasked size — the standard selectivity compensation (callers
     scale by 1/selectivity; measured on the filtered query: recall@3
-    0.42 at nprobe=3 -> 0.61 at nprobe=10 for a ~30% predicate)."""
-    import numpy as np
-    from pyspark.sql import types as T
+    0.42 at nprobe=3 -> 0.61 at nprobe=10 for a ~30% predicate).
 
-    # a small fixture arrives as one parquet file = one input split,
-    # which would serialize the whole scoring pass onto a single Python
-    # worker; an already-split query stream at real scale is untouched
-    # (same gate as the text operators — the scorer is CPU-bound and
-    # per-query independent, so partitioning never changes results).
-    # The caller-known query count caps the spread (VERDICT r16 item 1).
-    emb = spread_small_input(emb, "vec_id", n_rows=n_queries)
+    n_queries: the caller-known query count, which sizes the spread of
+    a one-split query input (the scorer is CPU-bound and per-query
+    independent, so partitioning never changes results); None keeps the
+    input's partitioning."""
+    import numpy as np
+
+    if n_queries is not None:
+        emb = spread_small_input(emb, "vec_id", n_rows=n_queries)
     if index_mask is None:
         index_mask = np.ones(len(ids), dtype=bool)
     n_probe = min(
         _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
     )
     b_all = spark.sparkContext.broadcast(
-        (books, ids, codes, coarse, assign, index_mask)
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("adc_score", T.DoubleType()),
-        ]
+        (books, ids, codes, coarse, assign, index_mask, index_labels)
     )
 
     def score(batches):
         import pandas as pd
 
-        bk, index_ids, index_codes, cents, bucket_of, eligible = b_all.value
-        # bucket -> index positions, grouped ONCE per task: the naive
-        # per-query np.isin(bucket_of, probe) rescans the whole index
-        # per query row (O(B*N) per batch — the 1.69x-vs-anchor drag
-        # VERDICT r9 flagged); nlist passes here make candidate lookup
-        # a concatenate of precomputed position arrays instead. The
-        # join's corpus restriction folds into the same pass.
+        bk, index_ids, index_codes, cents, bucket_of, eligible, labs = (
+            b_all.value
+        )
+        # inverted-list members grouped ONCE per task, so candidate
+        # lookup is a concatenate of precomputed position arrays instead
+        # of a per-query rescan of the whole index
         members = [
             np.flatnonzero((bucket_of == li) & eligible)
             for li in range(len(cents))
@@ -1648,31 +1629,25 @@ def _ivf_adc_topk_stream(
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
+            q = vk.normalize(np.array(list(pdf["embedding"]), dtype=np.float64))
             qids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            qsim = q @ cents.T  # (B, nlist) coarse routing scores
-            # one batched routing argsort (probe sets for every query)
-            probes = np.argsort(-qsim, axis=1)[:, :n_probe]
-            lut = np.einsum(
-                "bms,mks->bmk", q.reshape(len(q), _PQ_M, _PQ_SUB), bk
+            qlabs = (
+                pdf["label"].to_numpy(dtype=np.int64) if labs is not None else None
             )
+            # one batched routing argsort: probe sets for every query
+            probes = np.argsort(-(q @ cents.T), axis=1)[:, :n_probe]
+            lut = vk.adc_lut(q, bk)
             out_q, out_n, out_s = [], [], []
             for bi in range(len(q)):
                 cand = np.concatenate([members[p] for p in probes[bi]])
                 cand = cand[index_ids[cand] != qids[bi]]
+                if labs is not None:
+                    cand = cand[labs[cand] == qlabs[bi]]
                 if not len(cand):
                     continue
-                s = np.zeros(len(cand))
-                for m in range(_PQ_M):
-                    s += lut[bi, m, index_codes[cand, m]]
-                kk = min(k, len(cand))
-                # full (-score, nid) total order then take k — ties at
-                # the k boundary resolve to the smallest nid no matter
-                # how the candidate list is ordered (argpartition kept
-                # an arbitrary tied subset, the flat scorer's pitfall)
-                top = np.lexsort((index_ids[cand], -s))[:kk]
-                out_q.extend([qids[bi]] * kk)
+                s = vk.adc_scores(lut[bi], index_codes[cand])
+                top = vk.topk_by_score_then_id(s, index_ids[cand], k)
+                out_q.extend([qids[bi]] * len(top))
                 out_n.extend(index_ids[cand[top]])
                 out_s.extend(np.round(s[top], 4))
             yield pd.DataFrame(
@@ -1683,7 +1658,7 @@ def _ivf_adc_topk_stream(
                 }
             )
 
-    return emb.mapInPandas(score, out_schema)
+    return emb.mapInPandas(score, "qid long, nid long, adc_score double")
 
 
 @query(
@@ -2173,7 +2148,7 @@ def _pq_index_artifact(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-@query("embed_ann_pq_indexed", bench=True)
+@query("embed_ann_pq_indexed")
 def embed_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The offline-build / online-query ANN split, end to end
     (rows-only; equality with the session-trained embed_ann_pq and
@@ -2577,7 +2552,7 @@ def _pq_purge_seq(spark: SparkSession, index_root: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Sharded IVF-PQ online serving (VERDICT r13's one demand): every path
+# Sharded IVF-PQ online serving: every path
 # above this block BROADCASTS the codes table (behind the loud
 # _MAX_INDEX_ROWS cap) and streams queries — right when queries are the
 # big side, wrong for serving against a 100-TB codes table. This block
@@ -2620,7 +2595,7 @@ _PRUNE_MAX_LISTS = 4096
 # re-scans the query table per tile (the _tile hash is computed, so no
 # pushdown prunes it) and grows plan lineage O(ntiles) — fine for a
 # handful of tiles, a planner/driver tax at the many-hundreds-of-tiles
-# scale the docstring warned about (VERDICT r15 item 2).
+# scale.
 _TILE_MATERIALIZE_AT = 8
 
 
@@ -2831,8 +2806,8 @@ def ivf_pq_codes_df(
     # per serve call that bought nothing at scale (guide §2.4). A
     # small/under-split fixture still spreads across cores so the
     # Python scorer parallelizes, capped by the footer row count so a
-    # fixture-sized table is not shredded into core-count crumbs
-    # (VERDICT r16 items 1/3); cluster=False lets a caller that
+    # fixture-sized table is not shredded into core-count crumbs;
+    # cluster=False lets a caller that
     # restricts the candidate set (serve_ann_ivf_pq's eligible
     # semi-join) defer the spread until after its join.
     return (
@@ -2885,7 +2860,6 @@ def _ivf_adc_score_sharded(
     job and slices it per tile instead of paying one collect job per
     tile; rows beyond index 1 (2 with label) are ignored."""
     import numpy as np
-    from pyspark.sql import types as T
 
     n_probe = min(
         _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
@@ -2901,14 +2875,13 @@ def _ivf_adc_score_sharded(
             "here; only the per-call query batch broadcasts)"
         )
     if not q_rows:
-        # a query service passing an empty request batch gets an empty
-        # result with the scoring schema, matching the flat scorer
-        # (ADVICE r14: np.linalg.norm(axis=1) on a 0x0 array raised)
+        # an empty request batch gets an empty result with the scoring
+        # schema, matching the flat scorer (and never reaches the norm,
+        # which raises on a 0x0 array)
         return spark.createDataFrame(
             [], "qid long, nid long, score_raw double"
         )
-    qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
+    qmat = vk.normalize(np.array([r[1] for r in q_rows], dtype=np.float64))
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
     qlabs = (
         np.array([r[2] for r in q_rows], dtype=np.int64)
@@ -2922,9 +2895,9 @@ def _ivf_adc_score_sharded(
     # PREDICATE on the codes table — list_bucket IN (...) prunes whole
     # hive partitions at the scan and list_id IN (...) prunes row
     # groups via parquet stats, so a sparse request batch
-    # (nprobe * |Q| << nlist) never opens unprobed lists' files
-    # (VERDICT r14 item 2). Bit-equality is untouched: candidates only
-    # ever come from probed lists.
+    # (nprobe * |Q| << nlist) never opens unprobed lists' files.
+    # Bit-equality is untouched: candidates only ever come from probed
+    # lists.
     qsim = qmat @ coarse.T
     probes = np.argsort(-qsim, axis=1)[:, :n_probe]
     probed = [int(x) for x in np.unique(probes)]
@@ -2937,13 +2910,6 @@ def _ivf_adc_score_sharded(
             codes_df = codes_df.filter(F.col("list_bucket").isin(buckets))
         codes_df = codes_df.filter(F.col("list_id").isin(probed))
     b = spark.sparkContext.broadcast((books, qids, qmat, qlabs, probes))
-    part_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("score_raw", T.DoubleType()),
-        ]
-    )
 
     def score_shard(batches):
         import pandas as pd
@@ -2978,14 +2944,9 @@ def _ivf_adc_score_sharded(
         }
         # routing rides the broadcast (computed once on the driver,
         # same batched argsort as the flat scorer)
-        lut_shape = (_PQ_M, _PQ_SUB)
         for lo in range(0, len(q), _SHARD_Q_BLOCK):
             hi = min(lo + _SHARD_Q_BLOCK, len(q))
-            lut = np.einsum(
-                "bms,mks->bmk",
-                q[lo:hi].reshape(hi - lo, *lut_shape),
-                bk,
-            )
+            lut = vk.adc_lut(q[lo:hi], bk)
             out_q, out_n, out_s = [], [], []
             for bi in range(lo, hi):
                 hit = [
@@ -3000,16 +2961,13 @@ def _ivf_adc_score_sharded(
                 cand = cand[keep]
                 if not len(cand):
                     continue
-                s = np.zeros(len(cand))
-                for m in range(_PQ_M):
-                    s += lut[bi - lo, m, index_codes[cand, m]]
-                kk = min(k, len(cand))
+                s = vk.adc_scores(lut[bi - lo], index_codes[cand])
                 # shard-local top-k under the SAME (-score, nid) total
                 # order as the final reduce: the global top-k is a
                 # subset of the union of shard top-ks, so the reduce
                 # loses nothing
-                top = np.lexsort((index_ids[cand], -s))[:kk]
-                out_q.extend([q_ids[bi]] * kk)
+                top = vk.topk_by_score_then_id(s, index_ids[cand], k)
+                out_q.extend([q_ids[bi]] * len(top))
                 out_n.extend(index_ids[cand[top]])
                 out_s.extend(s[top])
             if out_q:
@@ -3021,7 +2979,9 @@ def _ivf_adc_score_sharded(
                     }
                 )
 
-    return codes_df.mapInPandas(score_shard, part_schema)
+    return codes_df.mapInPandas(
+        score_shard, "qid long, nid long, score_raw double"
+    )
 
 
 def _ivf_adc_reduce_topk(part: DataFrame, k: int = 5) -> DataFrame:
@@ -3031,9 +2991,9 @@ def _ivf_adc_reduce_topk(part: DataFrame, k: int = 5) -> DataFrame:
     the identical numpy round at the very end, so the output is
     bit-equal to the broadcast scorer's for the same artifacts.
 
-    identical rounding to the broadcast scorer's np.round (F.round
-    would HALF_UP where numpy rounds half-to-even — the exact
-    divergence class ADVICE r13 flagged in the drift rule)."""
+    The rounding is np_round4, identical to the broadcast scorer's
+    np.round: F.round would round half-up where numpy rounds
+    half-to-even, and a boundary score would differ between paths."""
     from pyspark.sql.window import Window
 
     from .udfs import np_round4
@@ -3102,8 +3062,8 @@ def serve_ann_ivf_pq(
     in tests/test_similarity.py).
 
     label_of: optional (vec_id, label) DataFrame switching on the
-    PER-QUERY dynamic label filter (the flat
-    _ivf_adc_topk_label_stream's semantics at corpus scale): candidate
+    PER-QUERY dynamic label filter (the flat scorer's index_labels
+    semantics at corpus scale): candidate
     labels attach to the codes shards by join, query labels ride the
     broadcast (q_df must then carry a `label` column), and each query
     only matches candidates sharing its label. Callers scale `nprobe`
@@ -3639,16 +3599,15 @@ def embed_ann_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FROZEN codebooks, and the NEWEST batch's vectors now query
     IVF-ADC top-k over base+epochs as one index.
 
-    |Q| is bounded to the newest epoch on purpose (VERDICT r12 item 2):
-    the incremental-maintenance question is "are the vectors that just
+    |Q| is bounded to the newest epoch on purpose: the
+    incremental-maintenance question is "are the vectors that just
     arrived well-served by the frozen index?", asked once per ingest
     batch — so query cost is O(|batch| × nprobe × list size) and, under
     the production nlist ~ N rule (SCALE.md, pinned by the
-    embed_ann_ivf sweep row at e~0.1), constant per query vector.
-    The previous registration scored |Q| = N corpus vectors against
-    N/nlist-member lists — the measured-e=1.32 fixed-nlist trap the
-    r12 sweep documented; the registered plan now embodies the
-    production rule instead of documenting around it. No vector is
+    embed_ann_ivf sweep row at e~0.1), constant per query vector,
+    where scoring all N corpus vectors against N/nlist-member lists
+    would grow with the corpus (a measured scaling exponent of 1.32
+    at fixed nlist). No vector is
     ever encoded twice; training cost is zero on the ingest path — the
     maintenance shape that holds when the codes table is 100 TB and a
     day's ingest is 0.1% of it. Reference: no vector/index surface
@@ -3669,10 +3628,11 @@ def embed_ann_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .filter((bucket < _TEST_LT) & ~(bucket < "0d"))
     )
-    # exact |Q| driver-side from the already-loaded id array (the flat
-    # loader bounds it): Spark's md5(cast(vec_id as string)) equals
-    # hashlib md5 of the decimal string, so this counts exactly the rows
-    # the filter above keeps — sizes the scorer spread without a job
+    # |Q| estimate for sizing the scorer spread, without a job: the
+    # index ids in the newest-epoch md5 buckets (Spark's
+    # md5(cast(vec_id as string)) equals hashlib md5 of the decimal
+    # string). It equals the filter's row count only while the index
+    # covers the embeddings table; it never affects results.
     n_q = sum(
         1
         for i in ids
@@ -3736,64 +3696,18 @@ def embed_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-guarded cap as embed_cosine_topk), so filtering makes the
     exact path cheaper, never wider. Queries stream through the shared
     Arrow/BLAS scorer. Reference: no vector surface (SURVEY.md §2.2)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
     cand = emb.filter(F.col("label").isin(*_FILTER_LABELS))
-
-    n_total = _parquet_num_rows(table_path(sf_dir, "embeddings"), spark)
-    if n_total is not None and n_total <= _MAX_INDEX_ROWS:
-        index_rows = cand.select("vec_id", "embedding").collect()
-    else:
-        index_rows = (
-            cand.select("vec_id", "embedding")
-            .limit(_MAX_INDEX_ROWS + 1)
-            .collect()
-        )
-    if len(index_rows) > _MAX_INDEX_ROWS:
-        raise ValueError(
-            f"embed_topk_filtered is the exact bounded-index baseline: "
-            f"filtered candidates exceed the {_MAX_INDEX_ROWS}-row cap. "
-            "Use embed_ann_filtered_ivf_pq for unbounded corpora."
-        )
-    ids = np.array([r.vec_id for r in index_rows], dtype=np.int64)
-    mat = np.array([r.embedding for r in index_rows], dtype=np.float64)
-    mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    b_index = spark.sparkContext.broadcast((ids, mat_n))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    ids, mat_n = _collect_bounded_index(
+        spark, sf_dir, cand.select("vec_id", "embedding"),
+        "embed_topk_filtered",
+        "Use embed_ann_filtered_ivf_pq for unbounded corpora.",
     )
-
-    def score(batches):
-        nids, nmat = b_index.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-            sims = np.round(qn @ nmat.T, 4)
-            qids = pdf["vec_id"].to_numpy()
-            res_q, res_n, res_c = [], [], []
-            for i, qid in enumerate(qids):
-                mask = nids != qid
-                row, cids = sims[i][mask], nids[mask]
-                order = np.lexsort((cids, -row))[:3]
-                res_q.extend([qid] * len(order))
-                res_n.extend(cids[order].tolist())
-                res_c.extend(row[order].tolist())
-            yield pd.DataFrame({"qid": res_q, "nid": res_n, "cosine": res_c})
-
-    q = emb.select("vec_id", "embedding").repartition(
-        min(4, spark.sparkContext.defaultParallelism)
+    # every vector queries, so |Q| is the whole table's footer count
+    n_q = _parquet_num_rows(table_path(sf_dir, "embeddings"), spark)
+    return _exact_cosine_stream(
+        spark, emb.select("vec_id", "embedding"), ids, mat_n, n_q, k=3
     )
-    return q.mapInPandas(score, out_schema)
 
 
 @query("embed_ann_filtered_ivf_pq")
@@ -3898,35 +3812,25 @@ def embed_topk_same_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface (SURVEY.md §2.2)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
 
     def topk_group(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame({"qid": [], "nid": [], "cosine": []})
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+        mat = vk.normalize(np.array(list(pdf["embedding"]), dtype=np.float64))
         sims = np.round(mat @ mat.T, 4)
-        res_q, res_n, res_c = [], [], []
-        for i in range(len(ids)):
-            mask = ids != ids[i]
-            row, cand = sims[i][mask], ids[mask]
-            order = np.lexsort((cand, -row))[:3]
-            res_q.extend([ids[i]] * len(order))
-            res_n.extend(cand[order].tolist())
-            res_c.extend(row[order].tolist())
-        return pd.DataFrame({"qid": res_q, "nid": res_n, "cosine": res_c})
+        picks = [
+            vk.topk_by_score_then_id(sims[i], ids, 3, exclude=ids[i])
+            for i in range(len(ids))
+        ]
+        rows = np.repeat(np.arange(len(ids)), [len(p) for p in picks])
+        pos = np.concatenate(picks)
+        return pd.DataFrame(
+            {"qid": ids[rows], "nid": ids[pos], "cosine": sims[rows, pos]}
+        )
 
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    return emb.groupBy("label").applyInPandas(topk_group, out_schema)
+    return emb.groupBy("label").applyInPandas(topk_group, _COSINE_SCHEMA)
 
 
 @query("embed_ann_same_label_ivf_pq")
@@ -3963,91 +3867,10 @@ def embed_ann_same_label_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_labels = max(1, len(set(index_labels.tolist())))
     nprobe = min(_IVFPQ_NLIST, math.ceil(_IVFPQ_NPROBE * n_labels))
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    return _ivf_adc_topk_label_stream(
-        spark, emb, books, ids, codes, coarse, assign, index_labels,
-        k=3, nprobe=nprobe,
+    return _ivf_adc_topk_stream(
+        spark, emb, books, ids, codes, coarse, assign,
+        k=3, index_labels=index_labels, nprobe=nprobe,
     )
-
-
-def _ivf_adc_topk_label_stream(
-    spark: SparkSession,
-    emb: DataFrame,
-    books,
-    ids,
-    codes,
-    coarse,
-    assign,
-    index_labels,
-    k: int = 3,
-    nprobe: int | None = None,
-) -> DataFrame:
-    """IVF-ADC top-k with a PER-QUERY label-equality mask: identical
-    routing/LUT/tie-break discipline as _ivf_adc_topk_stream, plus one
-    vectorized `labels[cand] == qlabel` compare per query. Kept as a
-    sibling rather than a flag on the shared scorer so the static-mask
-    paths pay zero per-query filter cost."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    n_probe = min(
-        _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
-    )
-    b_all = spark.sparkContext.broadcast(
-        (books, ids, codes, coarse, assign, index_labels)
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("adc_score", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        bk, index_ids, index_codes, cents, bucket_of, labs = b_all.value
-        members = [
-            np.flatnonzero(bucket_of == li) for li in range(len(cents))
-        ]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            qids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            qlabs = pdf["label"].to_numpy(dtype=np.int64)
-            qsim = q @ cents.T
-            probes = np.argsort(-qsim, axis=1)[:, :n_probe]
-            lut = np.einsum(
-                "bms,mks->bmk", q.reshape(len(q), _PQ_M, _PQ_SUB), bk
-            )
-            out_q, out_n, out_s = [], [], []
-            for bi in range(len(q)):
-                cand = np.concatenate([members[p] for p in probes[bi]])
-                cand = cand[
-                    (index_ids[cand] != qids[bi])
-                    & (labs[cand] == qlabs[bi])
-                ]
-                if not len(cand):
-                    continue
-                s = np.zeros(len(cand))
-                for m in range(_PQ_M):
-                    s += lut[bi, m, index_codes[cand, m]]
-                kk = min(k, len(cand))
-                top = np.lexsort((index_ids[cand], -s))[:kk]
-                out_q.extend([qids[bi]] * kk)
-                out_n.extend(index_ids[cand[top]])
-                out_s.extend(np.round(s[top], 4))
-            yield pd.DataFrame(
-                {
-                    "qid": np.array(out_q, dtype=np.int64),
-                    "nid": np.array(out_n, dtype=np.int64),
-                    "adc_score": np.array(out_s, dtype=np.float64),
-                }
-            )
-
-    return emb.mapInPandas(score, out_schema)
 
 
 # Hybrid retrieval: reciprocal-rank fusion of a lexical ranking and a
@@ -4282,62 +4105,19 @@ def embed_topk_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_MAX_INDEX_ROWS}-row broadcast cap (footer-guarded, fails fast);
     beyond that the production path is the IVF-PQ join twin, whose
     index shards. Queries stream through mapInPandas in Arrow
-    batches; brute force is O(|Q| x |X| x d) by definition."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    batches; brute force is O(|Q| x |X| x d) by definition. The splits
+    are disjoint, so the scorer's self-pair exclusion never fires."""
     from .sampling import _TEST_LT, _split_bucket
 
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     is_q = _split_bucket("vec_id") < _TEST_LT
-
+    ids, mat_n = _collect_bounded_index(
+        spark, sf_dir, emb.filter(~is_q), "embed_topk_join_exact",
+        "Use embed_ann_join_ivf_pq for unbounded corpora.",
+    )
     n_total = _parquet_num_rows(table_path(sf_dir, "embeddings"), spark)
-    if n_total is not None and n_total <= _MAX_INDEX_ROWS:
-        index_rows = emb.filter(~is_q).collect()
-    else:
-        index_rows = emb.filter(~is_q).limit(_MAX_INDEX_ROWS + 1).collect()
-    if len(index_rows) > _MAX_INDEX_ROWS:
-        raise ValueError(
-            f"embed_topk_join_exact is the exact bounded-index baseline: "
-            f"index corpus exceeds the {_MAX_INDEX_ROWS}-row broadcast cap. "
-            "Use embed_ann_join_ivf_pq for unbounded corpora."
-        )
-    ids = np.array([r.vec_id for r in index_rows], dtype=np.int64)
-    mat = np.array([r.embedding for r in index_rows], dtype=np.float64)
-    mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    b_index = spark.sparkContext.broadcast((ids, mat_n))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        nids, nmat = b_index.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-            sims = np.round(qn @ nmat.T, 4)
-            qids = pdf["vec_id"].to_numpy()
-            res_q, res_n, res_c = [], [], []
-            for i, qid in enumerate(qids):
-                # splits are disjoint, so no self-pair exclusion needed
-                order = np.lexsort((nids, -sims[i]))[:3]
-                res_q.extend([qid] * len(order))
-                res_n.extend(nids[order].tolist())
-                res_c.extend(sims[i][order].tolist())
-            yield pd.DataFrame({"qid": res_q, "nid": res_n, "cosine": res_c})
-
-    q = emb.filter(is_q).repartition(
-        min(4, spark.sparkContext.defaultParallelism)
-    )
-    return q.mapInPandas(score, out_schema)
+    n_q = None if n_total is None else n_total - len(ids)
+    return _exact_cosine_stream(spark, emb.filter(is_q), ids, mat_n, n_q, k=3)
 
 
 @query("embed_ann_join_ivf_pq")
@@ -4747,56 +4527,13 @@ def embed_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     For unbounded corpora the scale path is the LSH/IVF candidate
     generation feeding the same exact rescore, as in
     dedup_embedding_lsh."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n_index = _parquet_num_rows(table_path(sf_dir, "embeddings"), spark)
-    if n_index is not None and n_index <= _MAX_INDEX_ROWS:
-        index_rows = emb.collect()
-    else:
-        index_rows = emb.limit(_MAX_INDEX_ROWS + 1).collect()
-    if len(index_rows) > _MAX_INDEX_ROWS:
-        raise ValueError(
-            f"embed_range_search is the exact bounded-index baseline: "
-            f"index side exceeds the {_MAX_INDEX_ROWS}-row cap. Use LSH/"
-            f"IVF candidates + exact rescore for unbounded corpora."
-        )
-    ids = np.array([r.vec_id for r in index_rows], dtype=np.int64)
-    mat = np.array([r.embedding for r in index_rows], dtype=np.float64)
-    mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    b_index = spark.sparkContext.broadcast((ids, mat_n))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    ids, mat_n = _collect_bounded_index(
+        spark, sf_dir, emb, "embed_range_search",
+        "Use LSH/IVF candidates + exact rescore for unbounded corpora.",
     )
-
-    def score(batches):
-        nids, nmat = b_index.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-            sims = np.round(qn @ nmat.T, 4)
-            qids = pdf["vec_id"].to_numpy()
-            res_q, res_n, res_c = [], [], []
-            for i, qid in enumerate(qids):
-                hit = (sims[i] >= _RANGE_TAU) & (nids != qid)
-                res_q.extend([qid] * int(hit.sum()))
-                res_n.extend(nids[hit].tolist())
-                res_c.extend(sims[i][hit].tolist())
-            yield pd.DataFrame({"qid": res_q, "nid": res_n, "cosine": res_c})
-
-    # |Q| = |index| here (self range-search); cap the spread by it
-    return spread_small_input(emb, "vec_id", n_rows=len(ids)).mapInPandas(
-        score, out_schema
-    )
+    # |Q| = |index| here (self range-search)
+    return _exact_cosine_stream(spark, emb, ids, mat_n, len(ids), tau=_RANGE_TAU)
 
 
 _KMEANS_K = 8

@@ -32,7 +32,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def sql_query(name: str, sql: str, doc: str = "", bench: bool = False) -> None:
+def sql_query(name: str, sql: str, doc: str = "") -> None:
     """Register a query whose Spark implementation and DuckDB oracle are
     the same ANSI SQL string."""
 
@@ -44,7 +44,7 @@ def sql_query(name: str, sql: str, doc: str = "", bench: bool = False) -> None:
     fn.__name__ = name
     if name in REGISTRY:
         raise ValueError(f"duplicate query name {name!r}")
-    REGISTRY[name] = QuerySpec(name, fn, sql, doc, bench)
+    REGISTRY[name] = QuerySpec(name, fn, sql, doc)
 
 
 sql_query(
@@ -168,7 +168,6 @@ sql_query(
       AND l_shipdate <  TIMESTAMP '1997-07-01 00:00:00'
     """,
     doc="TPC-H Q14-shaped conditional-ratio aggregate over a join.",
-    bench=False,
 )
 
 sql_query(

@@ -2930,7 +2930,7 @@ _BPE_ENCODE_ORACLE = (
 )
 
 
-@query("text_bpe_encode", oracle=_BPE_ENCODE_ORACLE, bench=True)
+@query("text_bpe_encode", oracle=_BPE_ENCODE_ORACLE)
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-accurate token counts per document (VERDICT r11 item 1:
     training pipelines budget in BPE tokens, not chars/4): per-doc word

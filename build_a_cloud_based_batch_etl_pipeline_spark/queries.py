@@ -30,19 +30,18 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # DuckDB-runnable ANSI SQL; None => rows-only check
     doc: str = ""
-    bench: bool = False  # include in bench.py headline set
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None, bench: bool = False):
+def query(name: str, oracle: str | None = None):
     """Decorator registering a named query."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = QuerySpec(name, fn, oracle, (fn.__doc__ or "").strip(), bench)
+        REGISTRY[name] = QuerySpec(name, fn, oracle, (fn.__doc__ or "").strip())
         return fn
 
     return deco

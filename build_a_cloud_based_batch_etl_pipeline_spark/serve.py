@@ -146,7 +146,19 @@ def make_handler(
             self._reply(200 if envelope.get("success") else 500, envelope)
 
         def do_POST(self) -> None:  # noqa: N802 (http.server contract)
-            n = int(self.headers.get("Content-Length") or 0)
+            # a malformed or negative length is refused before any read:
+            # int() would raise and drop the connection, and read(-1)
+            # would block until the client hangs up
+            try:
+                n = int(self.headers.get("Content-Length") or 0)
+            except ValueError:
+                n = -1
+            if n < 0:
+                self._reply(
+                    400,
+                    {"success": False, "error": "Invalid Content-Length"},
+                )
+                return
             body = self.rfile.read(n) if n else b""
             if self.path == "/extract":
                 self._run(lambda: job.run_extract(spark, cfg, fetcher=fetcher))

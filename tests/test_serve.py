@@ -7,9 +7,11 @@ socket."""
 from __future__ import annotations
 
 import base64
+import http.client
 import json
 import threading
 import urllib.error
+import urllib.parse
 import urllib.request
 from http.server import HTTPServer
 
@@ -187,6 +189,20 @@ def test_ann_route_malformed_and_overcap_are_400(server, ann_index, monkeypatch)
     }
     status, env = _post(f"{base}/ann", json.dumps(ragged).encode())
     assert status == 400 and "ragged" in env["error"]
+    # a non-integer or negative Content-Length: the 400 envelope, not a
+    # dropped connection or a read that blocks until the client leaves
+    host = urllib.parse.urlsplit(base).netloc
+    for bad in ("abc", "-1"):
+        conn = http.client.HTTPConnection(host, timeout=30)
+        try:
+            conn.putrequest("POST", "/ann")
+            conn.putheader("Content-Length", bad)
+            conn.endheaders(b"{}")
+            resp = conn.getresponse()
+            status, env = resp.status, json.loads(resp.read().decode())
+        finally:
+            conn.close()
+        assert status == 400 and "Content-Length" in env["error"], bad
 
     # over-cap: 400 with the tiling hint, BEFORE any Spark work
     monkeypatch.setattr(sim, "_MAX_QUERY_ROWS", 2)

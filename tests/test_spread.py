@@ -42,9 +42,13 @@ def test_row_cap_coalesces_oversplit_tiny_input(spark):
     out = spread_small_input(df, "vec_id", n_rows=n)
     assert out.rdd.getNumPartitions() == target
     # coalesce, not a shuffle: the plan must carry no Exchange above
-    # the repartition the fixture itself created
+    # the repartition the fixture itself created (a shuffle merge such
+    # as repartition(2, "vec_id") would add a second one)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Coalesce" in plan
+    # an adaptive plan that has run prints its final and initial plans;
+    # count the Exchange nodes of the plan that executes
+    assert plan.split("== Initial Plan ==")[0].count("Exchange") == 1
 
 
 def test_row_cap_inert_when_target_reaches_parallelism(spark):
