@@ -1,15 +1,17 @@
 """Thin Hadoop FileSystem wrapper for driver-side filesystem control.
 
 Every maintenance/artifact path in the engine (Z-order re-clustering,
-persisted index artifacts, touched-partition checks) needs a handful of
-filesystem primitives: list, exists, rename, recursive delete, tiny
-marker-file reads/writes, parquet footer row counts. Before r13 these
-went through os/shutil — correct on the local FS the tests run on, but
-a dead end on the object-store URIs (`gs://`, `s3a://`) the 100-TB
-deployment would use (VERDICT r12 item 1). This module routes them all
-through the same `org.apache.hadoop.fs.FileSystem` handles that
-sinks.swap_dir / publish_version already use, so one code path serves
-`file:` and object-store schemes alike.
+persisted index artifacts, touched-partition checks, the streaming
+maintainers' checkpoint-lineage reads and epoch watermarks, retention
+sweeps) needs a handful of filesystem primitives: list, exists, rename,
+recursive delete, tiny marker-file reads/writes, parquet footer row
+counts. os/shutil would be correct on the local FS the tests run on,
+but a dead end on the object-store URIs (`gs://`, `s3a://`) the 100-TB
+deployment would use. This module routes them all — `streaming/` and
+`ingest.py` have no other filesystem access — through the same
+`org.apache.hadoop.fs.FileSystem` handles that sinks.swap_dir /
+publish_version use directly, so one code path serves `file:` and
+object-store schemes alike.
 
 Semantics notes (they differ from os/shutil and the code here papers
 over the differences explicitly):

@@ -165,10 +165,9 @@ def append_idempotent(
     `new_values_of` names a column, the tuple (n_new, distinct values
     of that column among the rows ACTUALLY appended). The clustered
     streaming load uses that to derive its touched-partition set from
-    the survivors of the idempotency anti-join, not the raw batch
-    (ADVICE r12: a duplicate key arriving under a NEW partition value
-    is skipped here, so its partition dir never exists — a raw-batch
-    touched set then flagged it as missing and wedged the stream). The
+    the survivors of the idempotency anti-join, not the raw batch: a
+    duplicate key arriving under a NEW partition value is skipped here,
+    so its partition dir never exists and must not count as touched. The
     extra collect is bounded by one batch's distinct values and runs
     while `incoming` is cached, so it costs no extra scan.
 
@@ -214,6 +213,20 @@ def append_idempotent(
     return n_new
 
 
+def stamp_posts(raw: DataFrame, key: str = "id") -> DataFrame:
+    """The load transform from raw landed rows to POSTS rows: drop rows
+    with a null or duplicate key, populate processedAt (the reference's
+    declared-but-never-populated Transform column), project to POSTS.
+    The batch loader and both streaming loads
+    (streaming/ingest_stream.py) apply exactly this."""
+    return (
+        raw.filter(F.col(key).isNotNull())
+        .dropDuplicates([key])
+        .withColumn("processedAt", F.current_timestamp())
+        .select(*[f.name for f in POSTS.fields])
+    )
+
+
 def load_landing_to_table(
     spark: SparkSession,
     cfg: IngestConfig,
@@ -228,13 +241,7 @@ def load_landing_to_table(
     src/load/main.py:40 + terraform/main.tf:277-298).
     """
     path = landing_path or cfg.landing_uri
-    incoming = (
-        read_json(spark, path, POSTS_RAW)
-        .filter(F.col(key).isNotNull())
-        .dropDuplicates([key])
-        .withColumn("processedAt", F.current_timestamp())
-        .select(*[f.name for f in POSTS.fields])
-    )
+    incoming = stamp_posts(read_json(spark, path, POSTS_RAW), key)
     return append_idempotent(spark, incoming, cfg.table_path(), key)
 
 
@@ -250,14 +257,11 @@ def _table_exists(spark: SparkSession, path: str) -> bool:
     # mid-swap crash artifact first, so a parked-but-unswapped table is
     # never mistaken for a missing one (a merge would then silently
     # restart its state from the current batch alone)
+    from .fsio import Fs
     from .sinks import swap_recover
 
     swap_recover(spark, path)
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return fs.exists(hpath)
+    return Fs(spark, path).exists(path)
 
 
 def _atomic_swap_rewrite(spark: SparkSession, table_path: str, new_df: DataFrame) -> None:

@@ -286,20 +286,17 @@ def expire_partitions(spark, path: str, partition_col: str, keep: list[str]) -> 
     partition atomic (one directory rename/delete each); a reader racing
     the sweep sees a partition entirely or not at all, never partially.
     """
-    jvm = spark._jvm
-    fs_conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(fs_conf)
-    if not fs.exists(hpath):
+    from .fsio import Fs, child
+
+    fs = Fs(spark, path)
+    if not fs.exists(path):
         return 0
     removed = 0
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
+    for name in fs.listdir(path):
         if not name.startswith(partition_col + "="):
             continue
-        value = name.split("=", 1)[1]
-        if value not in keep:
-            fs.delete(status.getPath(), True)
+        if name.split("=", 1)[1] not in keep:
+            fs.delete(child(path, name))  # raises when the delete fails
             removed += 1
     return removed
 

@@ -16,20 +16,52 @@ source + checkpoint:
 - backpressure    : maxFilesPerTrigger bounds each micro-batch
 
 At 100 TB scale the file-source log tracks arbitrarily many files; the
-transform inside foreachBatch is the same dedup+stamp logic as the batch
-loader, executed per micro-batch.
+transform inside foreachBatch is ingest.stamp_posts, the batch loader's
+own dedup+stamp transform, executed per micro-batch.
+
+Every stream here runs through one availableNow runner (`_drain`), and
+every state-table maintainer commits its micro-batch through one merge
+helper (`_merge_into`), which carries the shared replay/lineage contract.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IngestConfig
-from ..schemas import POSTS, POSTS_RAW
+from ..fsio import Fs, child
+from ..schemas import POSTS_RAW
 
+
+def _drain(stream: DataFrame, checkpoint_path: str, handle) -> None:
+    """Run `handle(batch, epoch_id)` over every micro-batch the stream's
+    source holds now, then stop (trigger availableNow), with progress
+    kept in `checkpoint_path`. An exception raised by `handle` fails the
+    query and surfaces here as a StreamingQueryException; the epoch it
+    was handling is not checkpointed, so a restart replays it."""
+    (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _landing_stream(
+    spark: SparkSession, cfg: IngestConfig, max_files_per_trigger: int | None
+) -> DataFrame:
+    """The landing zone as a file stream of raw POSTS rows: every run dir
+    under `cfg.landing_uri`, at most `max_files_per_trigger` files per
+    micro-batch when given."""
+    reader = spark.readStream.schema(POSTS_RAW).option("recursiveFileLookup", "true")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.json(cfg.landing_uri)
 
 
 def incremental_load(
@@ -48,35 +80,21 @@ def incremental_load(
     a crash between the parquet commit and the checkpoint commit replays
     the epoch on restart and would duplicate its rows.
     """
-    from ..ingest import append_idempotent
-
-    reader = (
-        spark.readStream.schema(POSTS_RAW)
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(cfg.landing_uri)
+    from ..ingest import append_idempotent, stamp_posts
 
     appended = {"n": 0}
     table_path = cfg.table_path()
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        out = (
-            batch.filter(F.col("id").isNotNull())
-            .dropDuplicates(["id"])
-            .withColumn("processedAt", F.current_timestamp())
-            .select(*[f.name for f in POSTS.fields])
+        appended["n"] += append_idempotent(
+            spark, stamp_posts(batch), table_path, key="id"
         )
-        appended["n"] += append_idempotent(spark, out, table_path, key="id")
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(cfg.checkpoint_uri, cfg.table_name))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _landing_stream(spark, cfg, max_files_per_trigger),
+        os.path.join(cfg.checkpoint_uri, cfg.table_name),
+        write_batch,
     )
-    q.awaitTermination()
     return appended["n"]
 
 
@@ -85,26 +103,11 @@ def _checkpoint_lineage(spark: SparkSession, checkpoint_path: str) -> str:
     Streaming writes to `<checkpoint>/metadata` when the checkpoint is
     first created — stable across restarts of the SAME checkpoint,
     regenerated when the checkpoint is wiped or replaced. Stamped into
-    the epoch-watermark marker name so that a checkpoint reset that
-    keeps the table becomes a LOUD lineage-mismatch error instead of
-    epoch ids silently comparing across lineages (a fresh lineage's
-    epoch 0 <= old hwm would be skipped — data loss, not replay-skip).
-    Read via the Hadoop FS API (tiny file, no Spark job)."""
-    import json as _json
-
-    jvm = spark._jvm
-    mpath = jvm.org.apache.hadoop.fs.Path(checkpoint_path + "/metadata")
-    fs = mpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    ins = fs.open(mpath)
-    try:
-        buf = bytearray()
-        b = ins.read()
-        while b != -1 and len(buf) < 4096:
-            buf.append(b)
-            b = ins.read()
-    finally:
-        ins.close()
-    return _json.loads(buf.decode("utf-8"))["id"].replace("-", "")[:12]
+    epoch watermarks and epoch partition names (see `_merge_into`).
+    Read in one filesystem round trip (fsio.Fs.read_text; tiny file, no
+    Spark job)."""
+    meta = child(checkpoint_path, "metadata")
+    return json.loads(Fs(spark, meta).read_text(meta))["id"].replace("-", "")[:12]
 
 
 def _atomic_swap_in(
@@ -112,7 +115,6 @@ def _atomic_swap_in(
     merged: DataFrame,
     table_path: str,
     epoch_id,
-    stamp_epoch: bool = False,
     lineage: str | None = None,
 ) -> None:
     """Write `merged` to a staging dir and swap it over the table path —
@@ -122,55 +124,40 @@ def _atomic_swap_in(
     state and the reader race window is two renames, not an O(files)
     delete.
 
-    With `stamp_epoch`, an empty `_epoch_hwm-<lineage>-<id>` marker
-    file is created INSIDE the staging dir before the swap: parquet
-    readers skip `_`-prefixed paths (the `_SUCCESS` convention), and
-    the one directory rename then commits data and merged-epoch
-    watermark together — there is no crash point where a
-    non-idempotent merge is applied but unrecorded, or recorded but
-    unapplied. Schema-agnostic, unlike a sentinel row. The lineage
-    (checkpoint query uuid, `_checkpoint_lineage`) scopes the
-    watermark to one checkpoint lineage."""
+    Given a `lineage`, an empty `_epoch_hwm-<lineage>-<id>` marker file
+    is created INSIDE the staging dir before the swap: parquet readers
+    skip `_`-prefixed paths (the `_SUCCESS` convention), and the one
+    directory rename then commits data and merged-epoch watermark
+    together — there is no crash point where a non-idempotent merge is
+    applied but unrecorded, or recorded but unapplied. Schema-agnostic,
+    unlike a sentinel row."""
     from ..sinks import swap_dir
 
     staging = table_path + f".epoch-{epoch_id}.staging"
     merged.write.mode("overwrite").parquet(staging)
-    if stamp_epoch:
-        if not lineage:
-            raise ValueError("stamp_epoch requires the checkpoint lineage")
-        jvm = spark._jvm
-        mpath = jvm.org.apache.hadoop.fs.Path(
-            staging + f"/_epoch_hwm-{lineage}-{int(epoch_id)}"
-        )
-        fs = mpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.create(mpath, True).close()
+    if lineage:
+        marker = child(staging, f"_epoch_hwm-{lineage}-{int(epoch_id)}")
+        Fs(spark, staging).write_text(marker, "")
     swap_dir(spark, staging, table_path)
 
 
 def _table_epoch_hwm(
     spark: SparkSession, table_path: str, lineage: str
 ) -> int | None:
-    """The merged-epoch high-water mark committed with the table by
-    `_atomic_swap_in(..., stamp_epoch=True)`, or None for a missing /
-    never-stamped table.
+    """The merged-epoch high-water mark committed with the existing
+    table at `table_path` by `_atomic_swap_in(..., lineage=...)`, or
+    None for a never-stamped table.
 
     Epoch ids are only comparable WITHIN one checkpoint lineage, so a
     marker stamped under a different lineage (checkpoint wiped or
     replaced while the table was kept) raises instead of being
     compared: a fresh lineage restarts at epoch 0 <= the stale hwm,
     and a silent skip there would be data loss, not replay-skip."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return None
     marks = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
+    for name in Fs(spark, table_path).listdir(table_path):
         if not name.startswith("_epoch_hwm-"):
             continue
-        rest = name[len("_epoch_hwm-"):]
-        mark_lineage, _, epoch_s = rest.rpartition("-")
+        mark_lineage, _, epoch_s = name[len("_epoch_hwm-"):].rpartition("-")
         if mark_lineage != lineage:
             raise RuntimeError(
                 f"epoch watermark at {table_path} was stamped under "
@@ -185,6 +172,61 @@ def _table_epoch_hwm(
             )
         marks.append(int(epoch_s))
     return max(marks) if marks else None
+
+
+def _merge_into(
+    spark: SparkSession,
+    table_path: str,
+    checkpoint_path: str,
+    epoch_id,
+    delta: DataFrame,
+    combine,
+    replay_safe: bool = False,
+) -> None:
+    """Commit one micro-batch into a state table: the new state is
+    `combine(current ∪ delta)` when the table exists, else `delta`, and
+    it replaces the table through `_atomic_swap_in`. Every state-table
+    maintainer commits through here, under one contract:
+
+    - Recovery first: sinks.swap_recover restores a table parked by a
+      crash mid-swap, so it is never mistaken for a missing table (the
+      merge would then restart the state from this batch alone).
+    - Replay: a crash after the swap but before the checkpoint commit
+      replays the epoch on restart. With `replay_safe` the combine is
+      idempotent (HLL union is register-wise max), so re-merging cannot
+      change the state; nothing is read or stamped, and even a lost
+      checkpoint that re-reads every file replays as a no-op. Any other
+      combine (count/sum addition, digest concatenation) is NOT
+      idempotent, so the swap stamps the merged epoch into the table
+      (`_epoch_hwm-<lineage>-<id>`, committed in the same rename as the
+      data) and an epoch at or below the table's high-water mark is
+      skipped. No crash point leaves a merge applied but unrecorded or
+      recorded but unapplied.
+    - Lineage: the watermark is scoped to the checkpoint's query uuid
+      (`_checkpoint_lineage`). A checkpoint wiped or replaced while the
+      table is kept raises a lineage mismatch (`_table_epoch_hwm`)
+      instead of silently skipping the fresh stream's epochs; reset
+      table and checkpoint together.
+
+    The only residual difference from a transactional format's MERGE is
+    the swap's two-rename reader race, not a correctness window."""
+    from ..sinks import swap_recover
+
+    swap_recover(spark, table_path)
+    lineage = None if replay_safe else _checkpoint_lineage(spark, checkpoint_path)
+    merged = delta
+    if Fs(spark, table_path).exists(table_path):
+        if lineage is not None:
+            hwm = _table_epoch_hwm(spark, table_path, lineage)
+            if hwm is not None and epoch_id <= hwm:
+                return  # replayed epoch, already merged
+        merged = combine(spark.read.parquet(table_path).unionByName(delta))
+    _atomic_swap_in(spark, merged, table_path, epoch_id, lineage=lineage)
+
+
+def _sum_by(*keys: str, cols: tuple[str, ...] = ("c",)):
+    """`combine` for additive state: regroup on `keys`, summing `cols`."""
+    return lambda rows: rows.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in cols])
 
 
 def maintain_distinct_sketch(
@@ -203,44 +245,27 @@ def maintain_distinct_sketch(
     stored sketches (never re-reading raw events — the batch twin is
     agg_hll_partial_merge).
 
-    The decisive property vs the count/sum aggregate above: HLL union is
+    The decisive property vs the count/sum aggregate below: HLL union is
     register-wise max, so it is IDEMPOTENT — re-merging a replayed epoch
     (crash between table rename and checkpoint commit, or a lost
     checkpoint re-reading every file) cannot change the state. The
-    epoch-marker machinery maintain_running_aggregate needs is simply
-    unnecessary here; sketch-valued state is how streaming distinct
-    stays exactly-once-equivalent at 100 TB with none of the marker's
-    crash window. tests/test_streaming.py replays the whole input from
-    scratch and asserts the table is bit-stable.
+    merge is `_merge_into(replay_safe=True)`: no epoch watermark and no
+    lineage read; sketch-valued state is how streaming distinct stays
+    exactly-once-equivalent at 100 TB with no watermark at all.
+    tests/test_streaming.py replays the whole input from scratch and
+    asserts the table is bit-stable.
     """
-    stream = spark.readStream.schema(events_schema).json(events_path)
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..sinks import swap_recover
+        _merge_into(
+            spark, sketch_table_path, checkpoint_path, epoch_id,
+            batch.groupBy(key_col).agg(F.hll_sketch_agg(id_col).alias("sk")),
+            lambda rows: rows.groupBy(key_col).agg(F.hll_union_agg("sk").alias("sk")),
+            replay_safe=True,
+        )
 
-        swap_recover(spark, sketch_table_path)  # mid-swap crash artifact
-        delta = batch.groupBy(key_col).agg(F.hll_sketch_agg(id_col).alias("sk"))
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(sketch_table_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
-            current = spark.read.parquet(sketch_table_path)
-            merged = (
-                current.unionByName(delta)
-                .groupBy(key_col)
-                .agg(F.hll_union_agg("sk").alias("sk"))
-            )
-        else:
-            merged = delta
-        _atomic_swap_in(spark, merged, sketch_table_path, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(events_schema).json(events_path)
+    _drain(stream, checkpoint_path, merge_batch)
 
 
 def maintain_frequency_sketch(
@@ -259,85 +284,50 @@ def maintain_frequency_sketch(
     Merge semantics contrast with the HLL sketch above and drive the
     design: CMS cells merge by ADDITION — commutative and associative
     (per-day sketches sum into any window) but NOT idempotent, so a
-    replayed epoch would double-count. The guard is committed WITH the
-    swapped table itself: `_atomic_swap_in(stamp_epoch=True)` places an
-    `_epoch_hwm-<id>` marker file inside the staging dir, so cells and
-    merged-epoch watermark land in one rename — there is no crash point
-    where the table is merged but the epoch unrecorded (or vice versa);
+    replayed epoch would double-count. The merge therefore takes
+    `_merge_into`'s stamped-swap epoch guard: cells and merged-epoch
+    watermark land in one rename, and replayed epochs are skipped;
     tests/test_streaming.py injects a crash on both sides of the swap
-    and pins bit-identical cells. Epochs at or below the stored
-    high-water mark are skipped on replay. (The high-water mark is
-    scoped to one checkpoint lineage and the lineage uuid is stamped
-    into the marker name: wiping the checkpoint while keeping the
-    table raises a lineage-mismatch error instead of silently skipping
-    the fresh stream's epochs — reset both together.)
+    and pins bit-identical cells.
     """
     from ..operators.text import _CMS_DEPTH, _CMS_WIDTH
 
-    stream = spark.readStream.schema(events_schema).json(events_path)
+    key_str = F.col(key_col).cast("string")
+    fan = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(d).alias("d"),
+                    (
+                        F.conv(
+                            F.substring(
+                                F.md5(F.concat(F.lit(f"{d}:"), key_str)), 1, 8
+                            ),
+                            16,
+                            10,
+                        ).cast("bigint")
+                        % _CMS_WIDTH
+                    ).alias("bkt"),
+                )
+                for d in range(_CMS_DEPTH)
+            ]
+        )
+    ).alias("b")
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..sinks import swap_recover
-
-        swap_recover(spark, cms_table_path)  # mid-swap crash artifact
-        lineage = _checkpoint_lineage(spark, checkpoint_path)
-        jvm = spark._jvm
-        fs_conf = spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path(cms_table_path)
-        fs = hpath.getFileSystem(fs_conf)
-        current = None
-        if fs.exists(hpath):
-            hwm = _table_epoch_hwm(spark, cms_table_path, lineage)
-            if hwm is not None and epoch_id <= hwm:
-                return  # replayed epoch: cell addition is NOT idempotent
-            current = spark.read.parquet(cms_table_path)
-        key_str = F.col(key_col).cast("string")
-        fan = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        (
-                            F.conv(
-                                F.substring(
-                                    F.md5(F.concat(F.lit(f"{d}:"), key_str)), 1, 8
-                                ),
-                                16,
-                                10,
-                            ).cast("bigint")
-                            % _CMS_WIDTH
-                        ).alias("bkt"),
-                    )
-                    for d in range(_CMS_DEPTH)
-                ]
-            )
-        ).alias("b")
         delta = (
             batch.select(fan)
             .select("b.d", "b.bkt")
             .groupBy("d", "bkt")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        if current is not None:
-            merged = (
-                current.unionByName(delta)
-                .groupBy("d", "bkt")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            merged = delta
-        _atomic_swap_in(
-            spark, merged, cms_table_path, epoch_id,
-            stamp_epoch=True, lineage=lineage,
+        _merge_into(
+            spark, cms_table_path, checkpoint_path, epoch_id, delta,
+            _sum_by("d", "bkt"),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(events_schema).json(events_path)
+    _drain(stream, checkpoint_path, merge_batch)
 
 
 def estimate_frequencies(
@@ -405,59 +395,23 @@ def maintain_running_aggregate(
 
     Replay guard: a merge is NOT naturally idempotent (re-merging a
     replayed epoch double-counts), so replayed epochs are skipped via
-    the merged-epoch high-water mark that `_atomic_swap_in(
-    stamp_epoch=True)` commits INSIDE the swapped table directory (an
-    `_epoch_hwm-<id>` marker file; parquet readers skip `_`-prefixed
-    paths). Data and watermark land in one rename, so the r4-era crash
-    window between table rename and marker write no longer exists — the
-    only residual difference from a transactional format (Delta/Iceberg
-    MERGE) is the swap's two-rename reader race, not a correctness
-    window.
+    the merged-epoch high-water mark `_merge_into` commits INSIDE the
+    swapped table directory. Data and watermark land in one rename, so
+    there is no crash window between table rename and marker write.
     """
-    from pyspark.sql import functions as F
-
-    stream = spark.readStream.schema(events_schema).json(events_path)
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..sinks import swap_recover
-
-        swap_recover(spark, agg_table_path)  # mid-swap crash artifact
-        lineage = _checkpoint_lineage(spark, checkpoint_path)
-        jvm = spark._jvm
-        fs_conf = spark._jsc.hadoopConfiguration()
         delta = batch.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
             F.sum("value").alias("total_value"),
         )
-        hpath = jvm.org.apache.hadoop.fs.Path(agg_table_path)
-        fs = hpath.getFileSystem(fs_conf)
-        if fs.exists(hpath):
-            hwm = _table_epoch_hwm(spark, agg_table_path, lineage)
-            if hwm is not None and epoch_id <= hwm:
-                return  # replayed epoch, already merged
-            current = spark.read.parquet(agg_table_path)
-            merged = (
-                current.unionByName(delta)
-                .groupBy("user_id")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("total_value").alias("total_value"),
-                )
-            )
-        else:
-            merged = delta
-        _atomic_swap_in(
-            spark, merged, agg_table_path, epoch_id,
-            stamp_epoch=True, lineage=lineage,
+        _merge_into(
+            spark, agg_table_path, checkpoint_path, epoch_id, delta,
+            _sum_by("user_id", cols=("n_events", "total_value")),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(events_schema).json(events_path)
+    _drain(stream, checkpoint_path, merge_batch)
 
 
 def maintain_term_counts(
@@ -476,55 +430,27 @@ def maintain_term_counts(
     Each micro-batch explodes its documents to terms and pre-aggregates
     (map-side combine: one row per distinct term in the batch — the
     minimum shuffle), then merges into the stored counts by addition.
-    Addition is NOT idempotent, so the merge is guarded by the same
-    merged-epoch watermark as the CMS/running-aggregate maintainers:
-    `_atomic_swap_in(stamp_epoch=True)` commits counts and epoch in one
-    rename; replayed epochs are skipped. At 100 TB the stored table is
-    vocabulary-sized (millions of rows), not corpus-sized — the reason
-    this is maintainable at all.
+    Addition is NOT idempotent, so the merge takes `_merge_into`'s
+    merged-epoch watermark, like the CMS/running-aggregate maintainers:
+    counts and epoch commit in one rename; replayed epochs are skipped.
+    At 100 TB the stored table is vocabulary-sized (millions of rows),
+    not corpus-sized — the reason this is maintainable at all.
     """
-    stream = spark.readStream.schema(docs_schema).json(docs_path)
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..sinks import swap_recover
-
-        swap_recover(spark, counts_table_path)  # mid-swap crash artifact
-        lineage = _checkpoint_lineage(spark, checkpoint_path)
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(counts_table_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        current = None
-        if fs.exists(hpath):
-            hwm = _table_epoch_hwm(spark, counts_table_path, lineage)
-            if hwm is not None and epoch_id <= hwm:
-                return  # replayed epoch: count addition is NOT idempotent
-            current = spark.read.parquet(counts_table_path)
         delta = (
             batch.select(F.explode(F.split(F.col(text_col), " ")).alias("term"))
             .filter(F.col("term") != "")
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        if current is not None:
-            merged = (
-                current.unionByName(delta)
-                .groupBy("term")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            merged = delta
-        _atomic_swap_in(
-            spark, merged, counts_table_path, epoch_id,
-            stamp_epoch=True, lineage=lineage,
+        _merge_into(
+            spark, counts_table_path, checkpoint_path, epoch_id, delta,
+            _sum_by("term"),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(docs_schema).json(docs_path)
+    _drain(stream, checkpoint_path, merge_batch)
 
 
 def read_top_terms(
@@ -550,10 +476,10 @@ def maintain_minhash_index(
     checkpoint_path: str,
     docs_schema,
 ) -> None:
-    """Streaming maintenance of the persistent MinHash dedup index
-    (VERDICT r5 item 1): as document files arrive, each micro-batch's
-    signatures and band rows are appended to `{index_root}/sigs` and
-    `{index_root}/bands` as atomic `epoch=<lineage>-<id>` partitions
+    """Streaming maintenance of the persistent MinHash dedup index: as
+    document files arrive, each micro-batch's signatures and band rows
+    are appended to `{index_root}/sigs` and `{index_root}/bands` as
+    atomic `epoch=<lineage>-<id>` partitions
     (sinks.commit_epoch_partition) — the accumulated corpus is indexed
     exactly once, and a NEW batch dedups against it via
     operators.dedup.dedup_against_index without recomputing one old
@@ -577,8 +503,6 @@ def maintain_minhash_index(
     from ..operators.dedup import minhash_index_rows
     from ..sinks import commit_epoch_partition
 
-    stream = spark.readStream.schema(docs_schema).json(docs_path)
-
     def index_batch(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
@@ -591,13 +515,8 @@ def maintain_minhash_index(
             spark, bands, f"{index_root}/bands", lineage, epoch_id
         )
 
-    q = (
-        stream.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(docs_schema).json(docs_path)
+    _drain(stream, checkpoint_path, index_batch)
 
 
 def maintain_eval_gram_index(
@@ -620,8 +539,6 @@ def maintain_eval_gram_index(
     from ..operators.sampling import five_gram_rows
     from ..sinks import commit_epoch_partition
 
-    stream = spark.readStream.schema(docs_schema).json(docs_path)
-
     def index_batch(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
@@ -633,13 +550,8 @@ def maintain_eval_gram_index(
             spark, rows, f"{index_root}/grams", lineage, epoch_id
         )
 
-    q = (
-        stream.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(docs_schema).json(docs_path)
+    _drain(stream, checkpoint_path, index_batch)
 
 
 def maintain_pq_index(
@@ -649,14 +561,14 @@ def maintain_pq_index(
     checkpoint_path: str,
     emb_schema,
 ) -> None:
-    """Streaming maintenance of the persisted PQ/IVF ANN index
-    (VERDICT r11 item 2): as new embedding files arrive, each
-    micro-batch encodes against the FROZEN base codebooks
-    (operators.similarity.append_pq_epoch) and commits one atomic
-    `epoch=<lineage>-<id>` partition to `{index_root}/pq_codes_epochs`
-    — the same commit/replay/lineage discipline as
-    maintain_minhash_index, so a replayed epoch is skipped by partition
-    existence and a checkpoint reset over a kept index raises loudly.
+    """Streaming maintenance of the persisted PQ/IVF ANN index: as new
+    embedding files arrive, each micro-batch encodes against the FROZEN
+    base codebooks (operators.similarity.append_pq_epoch) and commits
+    one atomic `epoch=<lineage>-<id>` partition to
+    `{index_root}/pq_codes_epochs` — the same commit/replay/lineage
+    discipline as maintain_minhash_index, so a replayed epoch is skipped
+    by partition existence and a checkpoint reset over a kept index
+    raises loudly.
 
     The base index (codebooks + centroids + base codes) must exist
     before the stream starts — training is the offline build_pq_index
@@ -674,21 +586,14 @@ def maintain_pq_index(
     maintainable. Periodic sinks.compact_table bounds small files."""
     from ..operators.similarity import append_pq_epoch
 
-    stream = spark.readStream.schema(emb_schema).json(emb_path)
-
     def index_batch(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
         lineage = _checkpoint_lineage(spark, checkpoint_path)
         append_pq_epoch(spark, batch, index_root, lineage, epoch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(emb_schema).json(emb_path)
+    _drain(stream, checkpoint_path, index_batch)
 
 
 def incremental_load_clustered(
@@ -703,23 +608,23 @@ def incremental_load_clustered(
 ) -> None:
     """Exactly-once incremental load INTO a Z-order-maintained
     hive-partitioned table — the ingest→OPTIMIZE loop a lakehouse
-    schedules, composed into one stream (VERDICT r11 item 5). Per
-    micro-batch: (1) idempotent-append the batch into
-    `partition_col=<value>` directories (ingest.append_idempotent — a
-    replayed epoch's keys are already present, so the re-append is a
-    no-op), then (2) run operators.layout.zorder_maintain over ONLY the
-    partitions this batch touched, re-clustering them on zorder_cols.
-    "Touched" means partitions that RECEIVED an append — derived from
-    the rows surviving the idempotency anti-join, not the raw batch
-    (ADVICE r12: a duplicate key arriving under a new partition value
-    appends nothing and creates no dir; treating it as touched wedged
-    the stream on a missing-dir error at every replay) — UNIONED with
-    the raw batch's values intersected with existing dirs, so a torn
-    pre-crash append converges even when the replay has surviving rows
-    (ADVICE r13: the survivors-only set left pre-crash-appended,
-    duplicate-on-replay partitions permanently unclustered). Directory
-    checks go through the Hadoop FS API (fsio.Fs) — object-store table
-    URIs work.
+    schedules, composed into one stream. Per micro-batch: (1)
+    idempotent-append the batch into `partition_col=<value>`
+    directories (ingest.append_idempotent — a replayed epoch's keys are
+    already present, so the re-append is a no-op), then (2) run
+    operators.layout.zorder_maintain over ONLY the partitions this
+    batch touched, re-clustering them on zorder_cols. "Touched" is the
+    union of two sets:
+    - the partitions that RECEIVED an append, derived from the rows
+      surviving the idempotency anti-join, not the raw batch: a
+      duplicate key arriving under a new partition value appends
+      nothing and creates no dir, so it is not touched;
+    - the raw batch's values that already have a dir, so a torn
+      pre-crash append converges even when the replay has surviving
+      rows (partitions appended before the crash but
+      duplicate-on-replay are still re-clustered).
+    Directory checks go through the Hadoop FS API (fsio.Fs) — object-
+    store table URIs work.
 
     Crash contract (pinned in tests/test_streaming.py): every
     crash point converges across a checkpoint restart —
@@ -743,19 +648,11 @@ def incremental_load_clustered(
     from ..ingest import append_idempotent
     from ..operators.layout import zorder_maintain
 
-    stream = spark.readStream.schema(src_schema).json(src_path)
-
     def load_batch(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
         batch = batch.dropDuplicates([key])
-        # touched partitions come from the rows that SURVIVE the
-        # idempotency anti-join, not the raw batch (ADVICE r12: a
-        # duplicate key arriving under a NEW partition value is skipped
-        # by append_idempotent, so its dir never exists — deriving
-        # `touched` from the raw batch then tripped the missing-dir
-        # guard below and wedged the stream on every replay). Bounded
-        # collect: one row per partition value actually appended.
+        # bounded collect: one row per partition value actually appended
         _n_new, new_vals = append_idempotent(
             spark,
             batch,
@@ -764,8 +661,6 @@ def incremental_load_clustered(
             partition_by=[partition_col],
             new_values_of=partition_col,
         )
-        from ..fsio import Fs
-
         listing = set(Fs(spark, table_path).listdir(table_path))
         appended = {f"{partition_col}={v}" for v in new_vals}
         # fail LOUD if a value's directory name doesn't match the
@@ -783,16 +678,10 @@ def incremental_load_clustered(
                 "touched-partition restriction doesn't support; "
                 "use path-safe partition values"
             )
-        # ALWAYS union in the raw batch's values that already have a
-        # dir (ADVICE r13): a torn pre-crash append replayed with SOME
-        # surviving rows would otherwise derive `touched` solely from
-        # the survivors, leaving partitions appended pre-crash but
-        # duplicate-on-replay permanently unclustered. Raw values whose
-        # dir doesn't exist are duplicate keys under brand-new
-        # partition values — legitimately not dirty, not an error
-        # (ADVICE r12). Extra existing-but-clean entries cost one
-        # fingerprint-vs-marker check each in zorder_maintain, never a
-        # re-cluster.
+        # raw values whose dir doesn't exist are duplicate keys under
+        # brand-new partition values — not dirty, not an error. Extra
+        # existing-but-clean entries cost one fingerprint-vs-marker
+        # check each in zorder_maintain, never a re-cluster.
         touched = appended | (
             {
                 f"{partition_col}={r[0]}"
@@ -804,13 +693,8 @@ def incremental_load_clustered(
             return
         zorder_maintain(spark, table_path, zorder_cols, only=touched)
 
-    q = (
-        stream.writeStream.foreachBatch(load_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(src_schema).json(src_path)
+    _drain(stream, checkpoint_path, load_batch)
 
 
 def incremental_load_validated(
@@ -837,16 +721,8 @@ def incremental_load_validated(
     rows), and the lineage stamp turns a checkpoint-reset-with-kept-
     table into a loud error. Returns {"appended": n, "quarantined": n}.
     """
-    from ..ingest import append_idempotent
+    from ..ingest import append_idempotent, stamp_posts
     from ..sinks import commit_epoch_partition
-
-    reader = (
-        spark.readStream.schema(POSTS_RAW)
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(cfg.landing_uri)
 
     counts = {"appended": 0, "quarantined": 0}
     table_path = cfg.table_path()
@@ -870,20 +746,15 @@ def incremental_load_validated(
             spark, bad, quarantine_uri, lineage, epoch_id
         ):
             counts["quarantined"] += bad.count()
-        out = (
-            good.dropDuplicates(["id"])
-            .withColumn("processedAt", F.current_timestamp())
-            .select(*[f.name for f in POSTS.fields])
+        counts["appended"] += append_idempotent(
+            spark, stamp_posts(good), table_path, key="id"
         )
-        counts["appended"] += append_idempotent(spark, out, table_path, key="id")
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _landing_stream(spark, cfg, max_files_per_trigger),
+        checkpoint_path,
+        write_batch,
     )
-    q.awaitTermination()
     return counts
 
 
@@ -906,32 +777,15 @@ def maintain_quantile_digest(
     per group (Arrow grouped-map), then merges into the stored digests
     by concatenation + re-compression — commutative/associative but NOT
     idempotent (a replayed epoch would double its weight), so the merge
-    takes the same stamped-swap epoch guard as the CMS maintainer: the
-    merged-epoch high-water mark commits WITH the table in one rename,
-    replayed epochs are skipped, and the lineage stamp turns a
-    checkpoint reset against a kept table into a loud error.
+    takes `_merge_into`'s stamped-swap epoch guard, like the CMS
+    maintainer.
 
     State is O(groups x K centroids) regardless of event volume — the
     reason per-day/per-partition quantile rollups stay maintainable at
     100 TB."""
     from ..operators.aggregates import _TD_SCHEMA, _td_build, _td_merge
 
-    stream = spark.readStream.schema(events_schema).json(events_path)
-
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..sinks import swap_recover
-
-        swap_recover(spark, digest_table_path)  # mid-swap crash artifact
-        lineage = _checkpoint_lineage(spark, checkpoint_path)
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(digest_table_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        current = None
-        if fs.exists(hpath):
-            hwm = _table_epoch_hwm(spark, digest_table_path, lineage)
-            if hwm is not None and epoch_id <= hwm:
-                return  # replayed epoch: weight addition is NOT idempotent
-            current = spark.read.parquet(digest_table_path)
         delta = (
             batch.select(
                 F.col(key_col).alias("event_type"),
@@ -940,26 +794,15 @@ def maintain_quantile_digest(
             .groupBy("event_type")
             .applyInPandas(_td_build, _TD_SCHEMA)
         )
-        if current is not None:
-            merged = (
-                current.unionByName(delta)
-                .groupBy("event_type")
-                .applyInPandas(_td_merge, _TD_SCHEMA)
-            )
-        else:
-            merged = delta
-        _atomic_swap_in(
-            spark, merged, digest_table_path, epoch_id,
-            stamp_epoch=True, lineage=lineage,
+        _merge_into(
+            spark, digest_table_path, checkpoint_path, epoch_id, delta,
+            lambda rows: rows.groupBy("event_type").applyInPandas(
+                _td_merge, _TD_SCHEMA
+            ),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(events_schema).json(events_path)
+    _drain(stream, checkpoint_path, merge_batch)
 
 
 def read_quantiles(
@@ -993,6 +836,7 @@ def read_quantiles(
     )
     return digests.mapInPandas(_extract, schema)
 
+
 def maintain_drift_profile(
     spark: SparkSession,
     events_path: str,
@@ -1007,10 +851,9 @@ def maintain_drift_profile(
     """Streaming drift-profile maintenance: keep the per-(key, bin)
     histogram tables the batch drift monitors (dq_ks_drift's KS + PSI,
     operators/dq.py) compute from, current as event files arrive — the
-    streaming twin that closes the batch-monitor loop (VERDICT r7 item
-    7). Readers get KS distance / PSI between any two keys at any time
-    from the stored 256-bin tables via read_drift_stats, never
-    re-scanning raw events.
+    streaming twin that closes the batch-monitor loop. Readers get KS
+    distance / PSI between any two keys at any time from the stored
+    256-bin tables via read_drift_stats, never re-scanning raw events.
 
     The grid is FIXED and caller-supplied (`lo`/`hi` — in production the
     reference/training distribution's bounds): dq_ks_drift's
@@ -1023,74 +866,42 @@ def maintain_drift_profile(
     clamp on its own grid.
 
     Merge semantics: bin counts merge by ADDITION — commutative and
-    associative but NOT idempotent — so the merge takes the same
-    stamped-swap epoch guard as the CMS maintainer
-    (maintain_frequency_sketch): the merged-epoch high-water mark
-    commits WITH the table in one rename, replayed epochs are skipped,
-    and a checkpoint reset against a kept table raises a lineage
-    mismatch instead of silently skipping.
+    associative but NOT idempotent — so the merge takes `_merge_into`'s
+    stamped-swap epoch guard, like the CMS maintainer
+    (maintain_frequency_sketch).
 
     State is O(keys x 256 bins) regardless of event volume; per batch
     the work is one conditional-count shuffle on (key, bin) — the same
     shape as the batch monitor minus its global min/max pass."""
     from ..operators.dq import _KS_BINS
 
-    stream = spark.readStream.schema(events_schema).json(events_path)
     if not hi > lo:
         raise ValueError(f"drift grid needs hi > lo, got [{lo}, {hi}]")
+    bin_expr = F.greatest(
+        F.least(
+            F.floor(
+                (F.col(value_col).cast("double") - F.lit(float(lo)))
+                * float(_KS_BINS)
+                / F.lit(float(hi) - float(lo))
+            ).cast("long"),
+            F.lit(_KS_BINS - 1),
+        ),
+        F.lit(0),
+    )
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..sinks import swap_recover
-
-        swap_recover(spark, profile_table_path)  # mid-swap crash artifact
-        lineage = _checkpoint_lineage(spark, checkpoint_path)
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(profile_table_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        current = None
-        if fs.exists(hpath):
-            hwm = _table_epoch_hwm(spark, profile_table_path, lineage)
-            if hwm is not None and epoch_id <= hwm:
-                return  # replayed epoch: count addition is NOT idempotent
-            current = spark.read.parquet(profile_table_path)
-        bin_expr = F.greatest(
-            F.least(
-                F.floor(
-                    (F.col(value_col).cast("double") - F.lit(float(lo)))
-                    * float(_KS_BINS)
-                    / F.lit(float(hi) - float(lo))
-                ).cast("long"),
-                F.lit(_KS_BINS - 1),
-            ),
-            F.lit(0),
-        )
         delta = (
-            batch.select(
-                F.col(key_col).alias("key"), bin_expr.alias("bin")
-            )
+            batch.select(F.col(key_col).alias("key"), bin_expr.alias("bin"))
             .groupBy("key", "bin")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        if current is not None:
-            merged = (
-                current.unionByName(delta)
-                .groupBy("key", "bin")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            merged = delta
-        _atomic_swap_in(
-            spark, merged, profile_table_path, epoch_id,
-            stamp_epoch=True, lineage=lineage,
+        _merge_into(
+            spark, profile_table_path, checkpoint_path, epoch_id, delta,
+            _sum_by("key", "bin"),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(events_schema).json(events_path)
+    _drain(stream, checkpoint_path, merge_batch)
 
 
 def read_drift_stats(
@@ -1160,28 +971,10 @@ def maintain_source_term_counts(
     Same contract as maintain_term_counts (one key column wider): each
     micro-batch pre-aggregates map-side to one row per distinct
     (source, term) in the batch, then merges into the stored counts by
-    addition. Addition is NOT idempotent, so the merge takes the
-    merged-epoch watermark guard — `_atomic_swap_in(stamp_epoch=True)`
-    commits counts and epoch in one rename; replayed epochs are
-    skipped; a checkpoint reset against a kept table is a loud lineage
-    error. Stored size is sum of per-source vocabularies, never corpus
-    rows."""
-    stream = spark.readStream.schema(docs_schema).json(docs_path)
+    addition under `_merge_into`'s merged-epoch watermark guard. Stored
+    size is sum of per-source vocabularies, never corpus rows."""
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..sinks import swap_recover
-
-        swap_recover(spark, counts_table_path)
-        lineage = _checkpoint_lineage(spark, checkpoint_path)
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(counts_table_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        current = None
-        if fs.exists(hpath):
-            hwm = _table_epoch_hwm(spark, counts_table_path, lineage)
-            if hwm is not None and epoch_id <= hwm:
-                return  # replayed epoch: count addition is NOT idempotent
-            current = spark.read.parquet(counts_table_path)
         delta = (
             batch.select(
                 F.col(source_col).alias("source"),
@@ -1191,26 +984,13 @@ def maintain_source_term_counts(
             .groupBy("source", "term")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        if current is not None:
-            merged = (
-                current.unionByName(delta)
-                .groupBy("source", "term")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            merged = delta
-        _atomic_swap_in(
-            spark, merged, counts_table_path, epoch_id,
-            stamp_epoch=True, lineage=lineage,
+        _merge_into(
+            spark, counts_table_path, checkpoint_path, epoch_id, delta,
+            _sum_by("source", "term"),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(docs_schema).json(docs_path)
+    _drain(stream, checkpoint_path, merge_batch)
 
 
 def read_js_divergence(
@@ -1327,8 +1107,6 @@ def maintain_cooc_graph(
     from ..operators.text import cooc_pair_rows
     from ..sinks import commit_epoch_partition
 
-    stream = spark.readStream.schema(docs_schema).json(docs_path)
-
     def index_batch(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
@@ -1341,10 +1119,5 @@ def maintain_cooc_graph(
             spark, words, f"{index_root}/words", lineage, epoch_id
         )
 
-    q = (
-        stream.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(docs_schema).json(docs_path)
+    _drain(stream, checkpoint_path, index_batch)

@@ -175,14 +175,30 @@ def test_compact_table_reduces_files_and_preserves_rows(spark, tmp_path):
     assert glob.glob(f"{path}/day=d0") and glob.glob(f"{path}/day=d1")
 
 
-def test_expire_partitions_drops_only_unkept(spark, tmp_path):
+def test_expire_partitions_drops_only_unkept(spark, tmp_path, monkeypatch):
+    import os
+
+    import pytest
+
     path = str(tmp_path / "retain")
     df = spark.createDataFrame(
         [(i, f"2024-01-0{1 + i % 3}") for i in range(30)], "id: long, ingest_date: string"
     )
     df.write.partitionBy("ingest_date").mode("overwrite").parquet(path)
 
-    from build_a_cloud_based_batch_etl_pipeline_spark import sinks
+    from build_a_cloud_based_batch_etl_pipeline_spark import fsio, sinks
+
+    # a failed delete is an error, never counted as removed
+    def failing_delete(self, uri, ignore_missing=True):
+        raise IOError(f"fs: delete {uri} failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(fsio.Fs, "delete", failing_delete)
+        with pytest.raises(IOError, match="delete"):
+            sinks.expire_partitions(
+                spark, path, "ingest_date", keep=["2024-01-02", "2024-01-03"]
+            )
+    assert "ingest_date=2024-01-01" in os.listdir(path)
 
     removed = sinks.expire_partitions(
         spark, path, "ingest_date", keep=["2024-01-02", "2024-01-03"]
