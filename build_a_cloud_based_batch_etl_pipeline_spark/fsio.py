@@ -248,6 +248,46 @@ class Fs:
             reader.close()
 
 
+def table_fingerprint(path: str, spark: SparkSession | None = None) -> str:
+    """Cheap content fingerprint of a parquet table path: relative file
+    names + sizes + mtimes, hashed. O(files) driver-side listing — the
+    same walk the footer guard does — so it changes whenever the table
+    is rewritten or regenerated. It is the version of every in-session
+    memo over a table (operators.util.memo), the name of every
+    persisted artifact directory and every stored `index_version`, so
+    its output format must never change: a changed byte orphans every
+    on-disk index. 'missing' for a path with no parquet files.
+
+    Local paths use an os.walk listing (a single file fingerprints
+    under the relative name '.'); non-local paths fall back to the
+    Hadoop FileSystem walk when `spark` is given, so 'missing' means
+    genuinely absent: were every object-store table 'missing', they
+    would all share one artifact directory and a stale artifact could
+    be served across corpora."""
+    import hashlib
+    import os
+
+    entries: list[tuple[str, int, object]] = []
+    if os.path.isdir(path) or (os.path.isfile(path) and path.endswith(".parquet")):
+        files = [path] if os.path.isfile(path) else sorted(
+            os.path.join(root, f)
+            for root, _dirs, names in os.walk(path)
+            for f in names
+            if f.endswith(".parquet")
+        )
+        for f in files:
+            st = os.stat(f)
+            entries.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    elif spark is not None and (fs := Fs(spark, path)).exists(path):
+        entries = [e for e in fs.walk_files(path) if e[0].endswith(".parquet")]
+    if not entries:
+        return "missing"
+    h = hashlib.sha256()
+    for rel, size, mtime in entries:
+        h.update(f"{rel}:{size}:{mtime}\n".encode())
+    return h.hexdigest()[:16]
+
+
 def child(uri: str, *names: str) -> str:
     """URI-safe path join: Hadoop paths always use '/' regardless of
     scheme or host OS."""

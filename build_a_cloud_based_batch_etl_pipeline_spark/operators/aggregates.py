@@ -671,7 +671,7 @@ def tdigest_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition partials so no single task ever sees a whole group),
     then a per-group merge plus a merged-of-merges '__all__' digest.
     Digest columns are (means, weights) arrays — storable, mergeable."""
-    from .util import cache_once
+    from .util import fixture_version, memo
 
     events = t(spark, sf_dir, "events").select(
         "event_type",
@@ -683,12 +683,13 @@ def tdigest_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow grouped-map build ran TWICE (the plan carried two _td_build
     # python stages over two full event scans for one digest set). The
     # cache holds <= K centroids per (group, salt) — KBs, not rows.
-    partials = cache_once(
+    partials = memo(
         spark,
         ("td_partials", sf_dir),
-        lambda: events.groupBy("event_type", "salt").applyInPandas(
-            _td_build, _TD_SCHEMA
-        ),
+        fixture_version(spark, sf_dir, "events"),
+        lambda: events.groupBy("event_type", "salt")
+        .applyInPandas(_td_build, _TD_SCHEMA)
+        .cache(),
     )
     merged = partials.groupBy("event_type").applyInPandas(_td_merge, _TD_SCHEMA)
     alldig = (

@@ -21,9 +21,10 @@ from pyspark.sql import functions as F
 
 from ..queries import query
 from .util import (
-    cache_once,
     cap_bucket_occupancy,
+    fixture_version,
     hint_label_map,
+    memo,
     seq1,
     spread_small_input,
     t,
@@ -158,12 +159,13 @@ def _shingles_sized(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFr
     carried 10 exchanges / 14 hash aggregates; the fused plan drops
     the sz subtrees from both it and dedup_ngram_jaccard, paying one
     doc_id exchange once, inside the shared cache)."""
-    return cache_once(
+    return memo(
         spark,
         ("jaccard_shingles_sized", sf_dir),
-        lambda: shingles(docs).withColumn(
-            "n", F.count("*").over(W.partitionBy("doc_id"))
-        ),
+        fixture_version(spark, sf_dir, "documents"),
+        lambda: shingles(docs)
+        .withColumn("n", F.count("*").over(W.partitionBy("doc_id")))
+        .cache(),
     )
 
 
@@ -341,36 +343,30 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-doc int64 gram arrays; the verify step below intersects per-pair
     # arrays instead of re-joining an exploded shingle table (which fans
     # out one row per SHARED shingle — quadratic on near-identical docs).
-    sh = cache_once(spark, ("mh_gram_hashes", sf_dir), lambda: gram_hashes(docs))
+    version = fixture_version(spark, sf_dir, "documents")
+    sh = memo(
+        spark, ("mh_gram_hashes", sf_dir), version, lambda: gram_hashes(docs).cache()
+    )
     # signature + banding expression trees are built INSIDE the cache
     # lambda: the 32 array_min folds are ~a thousand py4j expression
     # constructions, and building them on every call just to look up an
     # already-cached frame was pure driver overhead on the warm path
     def _bands():
-        return minhash_band_rows(minhash_signatures(sh))
+        return minhash_band_rows(minhash_signatures(sh)).cache()
     # Cached: the cap's sizes subtree and the self-join both read bands;
     # without the cache the 32 signature folds would be computed twice.
     # Narrow rows (id + band + hash), so the cache is a few dozen bytes/doc.
     # The over-cap probe (an EAGER one-row job — see over_cap_sizes) is
-    # additionally memoized per cached-bands key: the bands cache is
-    # immutable for the application's lifetime, so re-running the probe
-    # on every call paid one driver job per run for a constant answer.
-    from .util import attach_sub, memo_once, over_cap_sizes
+    # memoized at the same version as the bands it splits: re-running it
+    # on every call would pay one driver job per run for an answer that
+    # only changes when the documents table does.
+    from .util import attach_sub, over_cap_sizes
 
-    bands_c = cache_once(spark, ("mh_bands", sf_dir), _bands)
-    # Keyed like the bands cache itself (sf_dir, per-application), NOT a
-    # content fingerprint, deliberately (ADVICE r16): the memo pins the
-    # over-cap answer FOR THE CACHED BANDS FRAME — if the documents
-    # table were rewritten mid-application, cache_once would serve the
-    # same stale bands under this key anyway, so a fingerprint here
-    # would only let the sizes diverge from the frame they split. The
-    # whole mh_* family assumes fixtures are immutable for the
-    # application's lifetime (the engine-wide cache_once convention); a
-    # rewritten table needs a new session (or cache_once_clear +
-    # memo_once_clear together, which the perturb gate already does).
-    sizes = memo_once(
+    bands_c = memo(spark, ("mh_bands", sf_dir), version, _bands)
+    sizes = memo(
         spark,
         ("mh_band_capsizes", sf_dir),
+        version,
         lambda: over_cap_sizes(bands_c, ["band", "bh"], _MH_BAND_CAP),
     )
     bands = attach_sub(bands_c, sizes, ["band", "bh"], "doc_id")
@@ -389,10 +385,11 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides of the pair join, and uncached the corpus-wide
     # array_distinct pass would run once per reference.
     # (xxhash64 collisions across ~1e6 shingles: P ~ 1e-7 — negligible.)
-    sets = cache_once(
+    sets = memo(
         spark,
         ("mh_hsets", sf_dir),
-        lambda: sh.select("doc_id", F.array_distinct("grams").alias("hset")),
+        version,
+        lambda: sh.select("doc_id", F.array_distinct("grams").alias("hset")).cache(),
     )
     common = F.size(F.array_intersect(F.col("x.hset"), F.col("y.hset")))
     na, nb = F.size(F.col("x.hset")), F.size(F.col("y.hset"))
@@ -480,8 +477,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("x"),
     ).select("doc_id", "simhash", "x.chunk", "x.ch")
+    version = fixture_version(spark, sf_dir, "documents")
     chunks = cap_bucket_occupancy(
-        cache_once(spark, ("simhash_chunks", sf_dir), lambda: chunks),
+        memo(spark, ("simhash_chunks", sf_dir), version, lambda: chunks.cache()),
         ["chunk", "ch"],
         "doc_id",
         _MH_BAND_CAP,
@@ -684,6 +682,17 @@ _CLUSTERS_ORACLE = """
 """
 
 
+def _mh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cached (doc_a, doc_b) MinHash near-dup edge set the cluster
+    queries share, memoized at the documents table's version."""
+    return memo(
+        spark,
+        ("mh_edges", sf_dir),
+        fixture_version(spark, sf_dir, "documents"),
+        lambda: dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b").cache(),
+    )
+
+
 @query("dedup_clusters", oracle=_CLUSTERS_ORACLE)
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignment: MinHash-LSH near-dup pairs become
@@ -701,11 +710,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes partition the corpus) are ALSO property-tested in
     tests/test_dedup.py, independent of the fixture."""
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    edges = cache_once(
-        spark,
-        ("mh_edges", sf_dir),
-        lambda: dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b"),
-    )
+    edges = _mh_edges(spark, sf_dir)
     # Iterate ONLY over nodes that touch an edge: in a deduplicated
     # corpus the overwhelming majority of documents are singletons, and
     # each propagation round over the full corpus would shuffle every
@@ -721,7 +726,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     linked = propagate_min_label(nodes, edges)
     # Pin the join strategy explicitly — without a hint Catalyst's size
     # estimate for the localCheckpoint subtree flips broadcast<->SMJ
-    # depending on whether the cache_once("mh_edges") subtree is already
+    # depending on whether the _mh_edges subtree is already
     # materialized (VERDICT r6: warm-captured PLANS.md budget busted
     # from a cold session). hint_label_map keeps the plan deterministic
     # while staying size-safe: broadcast under a measured row gate,
@@ -749,11 +754,7 @@ def dedup_clusters_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
     family: near-clique dup graphs -> plain propagation (cheaper
     rounds); chain-heavy graphs -> this."""
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    edges = cache_once(
-        spark,
-        ("mh_edges", sf_dir),
-        lambda: dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b"),
-    )
+    edges = _mh_edges(spark, sf_dir)
     members = (
         edges.select(F.col("doc_a").alias("doc_id"))
         .unionByName(edges.select(F.col("doc_b").alias("doc_id")))
@@ -998,55 +999,51 @@ def dedup_against_index(
     signature subtree was ~80% of the warm query at sf0.1). Callers
     with a stable batch pass a fingerprint that IDENTIFIES THE BATCH
     CONTENT (e.g. the source table's content hash, as the registered
-    query does); the cache key is derived from it internally (ADVICE
-    r10: a caller-assembled key reused with a DIFFERENT batch silently
-    served stale signatures — deriving from the content fingerprint
-    makes key/batch divergence the one misuse left, and pins it to a
-    single documented argument). Pass None (the default) when the
-    batch is not content-addressed — signatures are then recomputed
-    per call, which is always correct."""
+    query does); it is the memo version of the batch frames, which are
+    keyed on `index_root`, so a different batch fingerprint rebuilds
+    them and a key can never be served with another batch's
+    signatures. Pass None (the default) when the batch is not
+    content-addressed — signatures are then recomputed per call,
+    which is always correct."""
     if batch_fingerprint is not None:
-        sig_new = cache_once(
+        sig_new = memo(
             spark,
-            ("mh_batch_sigs", batch_fingerprint),
+            ("mh_batch_sigs", index_root),
+            batch_fingerprint,
             lambda: minhash_signatures(
                 gram_hashes(new_docs.select("doc_id", "text"))
-            ),
+            ).cache(),
         )
         # banding the cached signatures is deterministic, so the banded
-        # frame shares the signature cache's key and lifecycle — the
-        # per-call 16-struct banding expression build (dozens of py4j
-        # round trips) runs once per batch, not per query call (r17,
-        # same driver-overhead class as the r16 minhash build fix)
-        bands_new = cache_once(
+        # frame shares the signature memo's version — the per-call
+        # 16-struct banding expression build (dozens of py4j round
+        # trips) runs once per batch, not per query call
+        bands_new = memo(
             spark,
-            ("mh_batch_bands", batch_fingerprint),
-            lambda: minhash_band_rows(sig_new),
+            ("mh_batch_bands", index_root),
+            batch_fingerprint,
+            lambda: minhash_band_rows(sig_new).cache(),
         )
     else:
         sig_new, bands_new = minhash_index_rows(new_docs)
     # converge any crashed purge swap before reading (a parked
     # partition with its live dir missing would silently shrink the
     # index for this query)
+    from ..fsio import table_fingerprint
     from ..sinks import purge_recover
-    from .similarity import _table_fingerprint
-    from .util import memo_once
 
     purge_recover(spark, f"{index_root}/bands")
     purge_recover(spark, f"{index_root}/sigs")
     # the stored-table READS (directory listing + schema resolution,
-    # ~150-300 ms of driver py4j work per call) are memoized on the
-    # tables' content fingerprints — names+sizes+mtimes, the same walk
-    # the artifact layer does — so a warm serve call reuses the plan
-    # handles while an in-session purge rewrite (which changes the
-    # partition files) fingerprints differently and re-reads (r17,
-    # guide §1.2 driver overhead; purge staleness pinned in
-    # tests/test_purge_index.py)
-    fp_b = _table_fingerprint(f"{index_root}/bands", spark)
-    fp_s = _table_fingerprint(f"{index_root}/sigs", spark)
-    stored_bands, stored_sigs = memo_once(
+    # ~150-300 ms of driver py4j work per call) are memoized with the
+    # tables' content fingerprints as the version, so a warm serve call
+    # reuses the plan handles while an in-session purge rewrite (which
+    # changes the partition files) misses and re-reads (purge staleness
+    # pinned in tests/test_purge_index.py)
+    stored_bands, stored_sigs = memo(
         spark,
-        ("mh_index_table_plans", index_root, fp_b, fp_s),
+        ("mh_index_table_plans", index_root),
+        tuple(table_fingerprint(f"{index_root}/{n}", spark) for n in ("bands", "sigs")),
         lambda: (
             spark.read.parquet(f"{index_root}/bands").select(
                 "doc_id", "band", "bh"
@@ -1096,13 +1093,11 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds instead of serving stale signatures and a restarted
     session reuses the built index instead of rebuilding."""
     from .sampling import _TEST_LT, _split_bucket
-    from .similarity import _table_fingerprint
     from .util import persisted_artifact
-    from ..sources import table_path
 
     docs = t(spark, sf_dir, "documents")
     is_new = _split_bucket() < _TEST_LT
-    fp = _table_fingerprint(table_path(sf_dir, "documents"), spark)
+    (fp,) = fixture_version(spark, sf_dir, "documents")
     root = persisted_artifact(
         spark,
         "mh_index",
@@ -1110,14 +1105,10 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp,
         lambda tmp: build_minhash_index(spark, docs.filter(~is_new), tmp),
     )
-    # fp is the documents table's content hash, so the derived signature
-    # cache key changes whenever the batch content does (sf_dir is
-    # folded into fp already via the table path's content)
+    # fp is the documents table's content hash, so the batch signature
+    # memo misses whenever the batch content changes
     return dedup_against_index(
-        spark,
-        docs.filter(is_new),
-        root,
-        batch_fingerprint=f"{sf_dir}:{fp}",
+        spark, docs.filter(is_new), root, batch_fingerprint=fp
     )
 
 
@@ -1269,12 +1260,9 @@ def _edges_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     and, uncached, would recompute it. A regenerated documents table
     changes the fingerprint and misses instead of serving stale
     edges."""
-    import os
-
-    from .similarity import _table_fingerprint
     from .util import persisted_artifact
 
-    fp = _table_fingerprint(os.path.join(sf_dir, "documents.parquet"), spark)
+    (fp,) = fixture_version(spark, sf_dir, "documents")
     root = persisted_artifact(
         spark,
         "mh_edges",
@@ -1346,12 +1334,12 @@ def dedup_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-equals-exact fixture argument as dedup_clusters).
 
     Plan shape (r9, VERDICT r8 item 6): the edge set is MATERIALIZED
-    once to a parquet artifact (memo_once keyed on the documents-table
-    fingerprint — the embed_ann_pq_indexed build/query split) and the
-    three self-join branches scan that table. The previous form read
-    the cache_once("mh_edges") plan handle three times, which printed
+    once to a parquet artifact (persisted_artifact, addressed by the
+    documents-table fingerprint — the embed_ann_pq_indexed build/query
+    split) and the three self-join branches scan that table. Reading
+    the _mh_edges plan handle three times instead would print
     the full un-materialized LSH subtree per branch — 49 cold-plan
-    exchanges for what is at runtime one subtree + two joins. Now the
+    exchanges for what is at runtime one subtree + two joins. The
     cold plan IS the runtime motion: three bounded scans + the wedge
     join on b + the closing-edge join on (a, c). At 100 TB this split
     is also the right architecture — the LSH edge table is an expensive
@@ -1485,17 +1473,19 @@ def dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degree column — uncached, each of the 5 unrolled iterations
     # re-derived the degree aggregate from the edge scan (the plan
     # carried the union+agg subtree once per iteration). Both frames
-    # are edge/node sized and static for the application's lifetime
-    # (they derive from the persisted edge artifact).
-    deg = cache_once(
+    # are edge/node sized and derive from the persisted edge artifact,
+    # so they share its documents-table version.
+    version = fixture_version(spark, sf_dir, "documents")
+    deg = memo(
         spark,
         ("pr_deg", sf_dir),
-        lambda: sym.groupBy("src").agg(
-            F.count(F.lit(1)).cast("long").alias("deg")
-        ),
+        version,
+        lambda: sym.groupBy("src")
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+        .cache(),
     )
-    outdeg = cache_once(
-        spark, ("pr_outdeg", sf_dir), lambda: sym.join(deg, "src")
+    outdeg = memo(
+        spark, ("pr_outdeg", sf_dir), version, lambda: sym.join(deg, "src").cache()
     )
     docs = t(spark, sf_dir, "documents").select("doc_id")
     r = docs.select("doc_id", F.lit(_PR_Q).cast("long").alias("r"))

@@ -843,13 +843,16 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # the analyzer pass over the three correlated-EXISTS templates is
-    # ~0.7 s of per-call driver work (measured r17) for a byte-identical
-    # plan every time — memoize the built DataFrame per fixture dir,
-    # the same warm-session plan reuse as the minhash builder (r16) and
-    # the serve-codes loader; execution still runs in full per call
-    from .util import memo_once
+    # ~0.7 s of per-call driver work for a byte-identical plan every
+    # time — memoize the built DataFrame per fixture dir, versioned on
+    # the six tables it reads so a rewritten table re-plans (the plan
+    # pins each table's file listing); execution still runs in full per
+    # call
+    from .util import fixture_version, memo
 
-    return memo_once(spark, ("dq_ref_integrity_plan", sf_dir), build)
+    tables = ("lineitem", "orders", "part", "supplier", "customer", "nation")
+    version = fixture_version(spark, sf_dir, *tables)
+    return memo(spark, ("dq_ref_integrity_plan", sf_dir), version, build)
 
 
 # ---------------------------------------------------------------------------

@@ -359,33 +359,34 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fv/fc survivor frames feed BOTH the next stage and their own
     stage count, and Catalyst expands the DAG into a tree — uncached,
     fv's full event scan+aggregate evaluated 3x and fc's 2x (the
-    t-digest double-evaluation class, VERDICT r16 item 6). cache_once
-    pins each to one evaluation: the cached rows are one (user_id,
+    t-digest double-evaluation class). A cached memo entry pins each
+    to one evaluation: the cached rows are one (user_id,
     timestamp) pair per SURVIVING user — strictly cheaper at any scale
     than re-scanning raw events per reference (guide §5: cache when
     recomputation costs more than the memory, with disk spill as the
     backstop)."""
-    from .util import cache_once
+    from .util import fixture_version, memo
 
     ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    fv = cache_once(
+    version = fixture_version(spark, sf_dir, "events")
+    first_view = F.min(F.when(F.col("event_type") == "view", F.col("ts")))
+    fv = memo(
         spark,
         ("events_funnel_fv", sf_dir),
-        lambda: ev.groupBy("user_id").agg(
-            F.min(
-                F.when(F.col("event_type") == "view", F.col("ts"))
-            ).alias("first_view")
-        ),
+        version,
+        lambda: ev.groupBy("user_id").agg(first_view.alias("first_view")).cache(),
     )
-    fc = cache_once(
+    fc = memo(
         spark,
         ("events_funnel_fc", sf_dir),
+        version,
         lambda: (
             ev.filter(F.col("event_type") == "click")
             .join(fv.filter(F.col("first_view").isNotNull()), "user_id")
             .filter(F.col("ts") > F.col("first_view"))
             .groupBy("user_id")
             .agg(F.min("ts").alias("first_click"))
+            .cache()
         ),
     )
     fp = (

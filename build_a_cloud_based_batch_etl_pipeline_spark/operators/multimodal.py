@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..queries import query
-from .util import cache_once, cap_bucket_occupancy, t
+from .util import cap_bucket_occupancy, fixture_version, memo, t
 
 try:  # real decoder if an imaging library is ever present
     from PIL import Image  # noqa: F401
@@ -340,11 +340,13 @@ def phash_pairs(bin_df: DataFrame, cache_key: tuple | None = None) -> DataFrame:
     bits rarely spread across all 4 chunks) -> exact bit_count(xor)
     verification on candidates only. Same scale shape as dedup_simhash:
     fingerprints are a projection, the only shuffles are the 4-rows/doc
-    band join (occupancy-capped) and the candidate verify."""
+    band join (occupancy-capped) and the candidate verify. cache_key,
+    when given, is the (key, version) pair the chunk frame is memoized
+    under (util.memo); otherwise it is cached per call."""
     spark = bin_df.sparkSession
     chunks = phash_chunk_rows(bin_df)
     if cache_key is not None:
-        chunks = cache_once(spark, cache_key, lambda: chunks)
+        chunks = memo(spark, *cache_key, lambda: chunks.cache())
     else:
         chunks = chunks.cache()
     chunks = cap_bucket_occupancy(chunks, ["chunk", "ch"], "doc_id", 10_000)
@@ -379,7 +381,8 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 but collide in aHash)."""
     docs = t(spark, sf_dir, "documents")
     bin_df = with_binary_payload(docs).select("doc_id", "payload")
-    return phash_pairs(bin_df, cache_key=("phash_chunks", sf_dir))
+    version = fixture_version(spark, sf_dir, "documents")
+    return phash_pairs(bin_df, cache_key=(("phash_chunks", sf_dir), version))
 
 
 def build_phash_index(
@@ -469,13 +472,11 @@ def multimodal_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     and images here — one commit discipline, three artifact kinds."""
 
     from .sampling import _TEST_LT, _split_bucket
-    from .similarity import _table_fingerprint
     from .util import persisted_artifact
-    from ..sources import table_path
 
     docs = t(spark, sf_dir, "documents")
     is_new = _split_bucket() < _TEST_LT
-    fp = _table_fingerprint(table_path(sf_dir, "documents"), spark)
+    (fp,) = fixture_version(spark, sf_dir, "documents")
 
     def build(tmp: str) -> None:
         corpus = with_binary_payload(docs.filter(~is_new)).select(

@@ -449,28 +449,33 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus total AND the shares; shares feeds the normalizer AND the
     output), and Catalyst expands the DAG into a tree — uncached, the
     full documents scan ran four times per call (the t-digest
-    double-evaluation class, VERDICT r16 item 6). cache_once pins each
-    to one evaluation; the cached rows are |sources|-bounded (a handful
-    of rows at any corpus size)."""
-    from .util import cache_once
+    double-evaluation class). A cached memo entry pins each to one
+    evaluation; the cached rows are |sources|-bounded (a handful of
+    rows at any corpus size)."""
+    from .util import fixture_version, memo
 
     docs = t(spark, sf_dir, "documents")
-    per = cache_once(
+    version = fixture_version(spark, sf_dir, "documents")
+    per = memo(
         spark,
         ("tempmix_per_source", sf_dir),
-        lambda: docs.groupBy("source").agg(
-            F.sum(F.ceil(F.col("n_chars") / 4.0)).alias("est_tokens"),
-        ),
+        version,
+        lambda: docs.groupBy("source")
+        .agg(F.sum(F.ceil(F.col("n_chars") / 4.0)).alias("est_tokens"))
+        .cache(),
     )
     tot = per.agg(F.sum("est_tokens").alias("corpus_tokens"))
-    shares = cache_once(
+    shares = memo(
         spark,
         ("tempmix_shares", sf_dir),
-        lambda: per.crossJoin(F.broadcast(tot)).select(
+        version,
+        lambda: per.crossJoin(F.broadcast(tot))
+        .select(
             "source",
             "est_tokens",
             (F.col("est_tokens") * 1.0 / F.col("corpus_tokens")).alias("p"),
-        ),
+        )
+        .cache(),
     )
     z = shares.agg(F.sum(F.pow("p", _MIX_ALPHA)).alias("norm"))
     w = F.pow("p", _MIX_ALPHA) / F.col("norm")
@@ -714,13 +719,11 @@ def decontaminate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     an index query can get; contrast dedup_incremental_index, whose
     MinHash estimate is rows-only by nature)."""
 
-    from .similarity import _table_fingerprint
-    from .util import persisted_artifact
-    from ..sources import table_path
+    from .util import fixture_version, persisted_artifact
 
     docs = spread_small_input(t(spark, sf_dir, "documents"), "doc_id")
     is_eval = _split_bucket() < _VALID_LT
-    fp = _table_fingerprint(table_path(sf_dir, "documents"), spark)
+    (fp,) = fixture_version(spark, sf_dir, "documents")
     root = persisted_artifact(
         spark,
         "eval_gram_index",

@@ -28,13 +28,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsio import table_fingerprint
 from ..queries import query
 from ..sources import table_path
 from .util import (
     attach_sub,
-    cache_once,
     cap_bucket_occupancy,
+    fixture_version,
     hint_label_map,
+    memo,
     over_cap_sizes,
     rbin,
     spread_small_input,
@@ -122,62 +124,6 @@ def _parquet_num_rows(path: str, spark: SparkSession | None = None) -> int | Non
         return None
     except Exception:
         return None
-
-
-def _table_fingerprint(path: str, spark: SparkSession | None = None) -> str:
-    """Cheap content fingerprint of a parquet table path: relative file
-    names + sizes + mtimes, hashed. O(files) driver-side listing —
-    the same walk the footer guard already does — so memoization keyed
-    on it cannot serve stale state after the table is rewritten or
-    regenerated within one Spark application. 'missing' for a path
-    with no parquet files.
-
-    Local paths keep the original os.walk listing (byte-identical
-    fingerprints to earlier rounds — persisted artifacts stay valid);
-    non-local paths fall back to the Hadoop FileSystem walk when
-    `spark` is given, so 'missing' means genuinely absent: were every
-    object-store table 'missing', they would all share one artifact
-    directory and a stale artifact could be served across corpora."""
-    import hashlib
-    import os
-
-    entries: list[tuple[str, int, object]] = []
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(root, f)
-            for root, _dirs, names in os.walk(path)
-            for f in names
-            if f.endswith(".parquet")
-        )
-        for f in files:
-            st = os.stat(f)
-            entries.append(
-                (os.path.relpath(f, path), st.st_size, st.st_mtime_ns)
-            )
-    elif os.path.isfile(path) and path.endswith(".parquet"):
-        st = os.stat(path)
-        # relpath(path, path) == "." — kept verbatim so single-file
-        # fingerprints stay byte-identical to earlier rounds (persisted
-        # artifacts keyed on them remain valid)
-        entries.append(
-            (os.path.relpath(path, path), st.st_size, st.st_mtime_ns)
-        )
-    elif spark is not None:
-        from ..fsio import Fs
-
-        fs = Fs(spark, path)
-        if fs.exists(path):
-            entries = [
-                (rel, sz, mt)
-                for rel, sz, mt in fs.walk_files(path)
-                if rel.endswith(".parquet")
-            ]
-    if not entries:
-        return "missing"
-    h = hashlib.sha256()
-    for rel, size, mtime in entries:
-        h.update(f"{rel}:{size}:{mtime}\n".encode())
-    return h.hexdigest()[:16]
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -684,14 +630,16 @@ def lsh_candidate_pairs(
     # Cached: the cap's bucket-sizes subtree and both self-join sides read
     # the keyed table; the cache avoids recomputing the hyperplane dot
     # products. Rows are (vec_id, tbl, bkt) — three ints per table entry.
-    # Registry queries pass cache_key so repeat invocations (bench runs
-    # 3x; the keyed table depends only on emb/bits/tables) reuse ONE
-    # cache entry; ad-hoc callers (tests, planted frames) cache per-call.
+    # Registry queries pass cache_key = (memo key, version) so repeat
+    # invocations (bench runs 3x; the keyed table depends only on
+    # emb/bits/tables) reuse ONE cache entry until the table changes;
+    # ad-hoc callers (tests, planted frames) cache per-call.
     if cache_key is not None:
-        keyed_cached = cache_once(
+        keyed_cached = memo(
             emb.sparkSession,
-            (*cache_key, bits, tables),
-            lambda: _lsh_keyed(emb, bits, tables),
+            (*cache_key[0], bits, tables),
+            cache_key[1],
+            lambda: _lsh_keyed(emb, bits, tables).cache(),
         )
     else:
         keyed_cached = _lsh_keyed(emb, bits, tables).cache()
@@ -751,7 +699,8 @@ def embed_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py, including a planted-near-duplicate check
     with near-dup-regime parameters)."""
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return ann_lsh_topk(emb, cache_key=("lsh_keyed", sf_dir))
+    version = fixture_version(spark, sf_dir, "embeddings")
+    return ann_lsh_topk(emb, cache_key=(("lsh_keyed", sf_dir), version))
 
 
 # Multiprobe defaults: more bits (finer buckets => lower per-bucket
@@ -870,10 +819,11 @@ def lsh_multiprobe_candidates(
     keyed row per vector each) trade for probes (the cheap axis:
     nprobe - 1 extra int rows per table entry)."""
     if cache_key is not None:
-        keyed = cache_once(
+        keyed = memo(
             emb.sparkSession,
-            (*cache_key, "mp", bits, tables, nprobe),
-            lambda: _lsh_keyed_mp(emb, bits, tables, nprobe),
+            (*cache_key[0], "mp", bits, tables, nprobe),
+            cache_key[1],
+            lambda: _lsh_keyed_mp(emb, bits, tables, nprobe).cache(),
         )
     else:
         keyed = _lsh_keyed_mp(emb, bits, tables, nprobe).cache()
@@ -943,7 +893,8 @@ def embed_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the cost model; SCALE.md records the measured growth exponent
     next to the exact-match bits-rule row)."""
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return ann_lsh_topk_multiprobe(emb, cache_key=("lsh_mp", sf_dir))
+    version = fixture_version(spark, sf_dir, "embeddings")
+    return ann_lsh_topk_multiprobe(emb, cache_key=(("lsh_mp", sf_dir), version))
 
 
 @query("dedup_embedding_lsh")
@@ -961,8 +912,10 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     fewer tables than this fixture's moderate-cosine (<= ~0.51) pairs.
     """
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    version = fixture_version(spark, sf_dir, "embeddings")
     cand = lsh_candidate_pairs(
-        emb, _LSH_BITS, _LSH_TABLES, directed=False, cache_key=("lsh_keyed", sf_dir)
+        emb, _LSH_BITS, _LSH_TABLES, directed=False,
+        cache_key=(("lsh_keyed", sf_dir), version),
     )
     scored = blas_pair_scores(cand, ["qid", "nid"]).select(
         F.col("qid").alias("id_a"), F.col("nid").alias("id_b"), "cosine"
@@ -1035,12 +988,14 @@ def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         decimals=None,
     )
     w = W.partitionBy("vec_id").orderBy(F.col("csim").desc(), "cl")
-    choice = cache_once(
+    choice = memo(
         spark,
         ("ivf_choice", sf_dir, _IVF_NPROBE),
+        fixture_version(spark, sf_dir, "embeddings"),
         lambda: assigned.withColumn("crn", F.row_number().over(w))
         .filter(F.col("crn") <= _IVF_NPROBE)
-        .select("vec_id", F.col("cl").alias("bucket"), "crn"),
+        .select("vec_id", F.col("cl").alias("bucket"), "crn")
+        .cache(),
     )
     # b_ix alias: both cogroup sides descend from `choice`, and Spark's
     # ambiguous-self-join check needs the two key lineages told apart.
@@ -1272,22 +1227,18 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
     embeddings table, L2-normalized so ADC inner product approximates
     cosine. Bounded by the same footer guard as embed_cosine_topk.
 
-    Memoized per (applicationId, sf_dir, table fingerprint) via
-    util.memo_once (one lifecycle discipline for all driver-side
-    artifact memos) — codebooks are a trained
-    artifact, deterministic given the corpus (fixed k-means init, no
-    RNG), and the four PQ queries share them in a warm session instead
-    of re-running driver k-means per invocation. The fingerprint (file
-    names + sizes + mtimes, `_table_fingerprint`) makes the memo
-    content-addressed: rewriting or regenerating the embeddings table
-    within one application invalidates the entry instead of silently
-    serving stale codes."""
-    from .util import memo_once
-
-    fp = _table_fingerprint(table_path(sf_dir, "embeddings"), spark)
-    return memo_once(
+    Memoized per (applicationId, sf_dir, PQ shape) via util.memo —
+    codebooks are a trained artifact, deterministic given the corpus
+    (fixed k-means init, no RNG), and the four PQ queries share them in
+    a warm session instead of re-running driver k-means per
+    invocation. The version is the embeddings table's fingerprint
+    (file names + sizes + mtimes, fsio.table_fingerprint), so
+    rewriting or regenerating the table within one application
+    rebuilds the entry instead of silently serving stale codes."""
+    return memo(
         spark,
-        ("pq_fit", sf_dir, fp, _PQ_M, _PQ_K, _PQ_TRAIN_ROWS),
+        ("pq_fit", sf_dir, _PQ_M, _PQ_K, _PQ_TRAIN_ROWS),
+        fixture_version(spark, sf_dir, "embeddings"),
         lambda: _pq_fit_build(spark, sf_dir),
     )
 
@@ -1735,12 +1686,13 @@ def dedup_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .dedup import propagate_min_label
 
-    edges = cache_once(
+    edges = memo(
         spark,
         ("semantic_edges", sf_dir),
-        lambda: dedup_embedding_cosine(spark, sf_dir).select(
-            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-        ),
+        fixture_version(spark, sf_dir, "embeddings"),
+        lambda: dedup_embedding_cosine(spark, sf_dir)
+        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+        .cache(),
     )
     members = (
         edges.select(F.col("doc_a").alias("doc_id"))
@@ -1789,7 +1741,7 @@ def dedup_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pq_index_version(sf_dir: str, spark: SparkSession | None = None) -> str:
     """The version a fresh index build would carry: the embeddings
     table's content fingerprint. Staleness == stored != this."""
-    return _table_fingerprint(table_path(sf_dir, "embeddings"), spark)
+    return table_fingerprint(table_path(sf_dir, "embeddings"), spark)
 
 
 def _swap_write(
@@ -2111,11 +2063,10 @@ def load_pq_index(spark: SparkSession, sf_dir: str, index_root: str):
             "(SCALE.md) instead of a flat load"
         )
 
-    from .util import memo_once
-
-    books, coarse = memo_once(
+    books, coarse = memo(
         spark,
-        ("pq_codebook_arrays", index_root, stored),
+        ("pq_codebook_arrays", index_root),
+        stored,
         lambda: _load_codebook_arrays(spark, index_root),
     )
     rows = _read_index_rows(
@@ -2131,9 +2082,8 @@ def load_pq_index(spark: SparkSession, sf_dir: str, index_root: str):
 def _pq_index_artifact(spark: SparkSession, sf_dir: str) -> str:
     """The persisted PQ/IVF index dir, content-addressed on the
     embeddings table fingerprint (util.persisted_artifact: crash-safe
-    publish, cross-session reuse, superseded-fingerprint pruning —
-    ADVICE r9 replaced the memo_once'd tempdirs that leaked on
-    eviction and never actually persisted across sessions). The
+    publish, cross-session reuse, superseded-fingerprint pruning; it
+    survives the session and is never orphaned by memo eviction). The
     fingerprint carries the storage-layout tag: an artifact built
     before the list_bucket partitioning is a DIFFERENT dir, so layout
     changes rebuild instead of serving a prune-less index."""
@@ -2233,11 +2183,10 @@ def load_pq_codebooks(spark: SparkSession, index_root: str):
     # per request batch (the same soundness argument as the
     # validate-once stamp; books+coarse are O(M*K*SUB + NLIST*DIM)
     # doubles, ~0.6 MB of driver memory per live version).
-    from .util import memo_once
-
-    books, coarse = memo_once(
+    books, coarse = memo(
         spark,
-        ("pq_codebook_arrays", index_root, stored),
+        ("pq_codebook_arrays", index_root),
+        stored,
         lambda: _load_codebook_arrays(spark, index_root),
     )
     return books, coarse, stored
@@ -2716,39 +2665,34 @@ def ivf_pq_codes_df(
       divergence class ADVICE r13 flagged in the flat loader);
     - duplicate vec_id across base+epochs: one groupBy-count probe.
 
-    VALIDATE ONCE, SERVE MANY (VERDICT r14 item 1): the aggregates run
-    once per validation stamp — (index_version, sorted epoch partition
-    names, drift policy) — and are skipped while the stamp matches, so
+    VALIDATE ONCE, SERVE MANY: the aggregates run once per (index,
+    drift policy) and validation stamp — (index_version, sorted epoch
+    partition names, purge sequence), the memo version — and are
+    skipped while the stamp matches, so
     a query service calling serve_ann_ivf_pq per request batch pays
     the O(corpus) checks only on the first touch of a new index
     version or epoch set. The stamp is sound because the base is
     content-addressed (a rebuild changes index_version, read per call
     from footer STATS, not rows) and epochs are append-only atomic
     partitions (a new epoch changes the name set; a committed one is
-    never rewritten). The memo is per-application (util.memo_once), so
-    a fresh serving process re-proves the invariants exactly once."""
-    from .util import memo_once
-
+    never rewritten). The memo is per-application (util.memo), so a
+    fresh serving process re-proves the invariants exactly once."""
     books, coarse, version = load_pq_codebooks(spark, index_root)
     epochs = (
         _pq_epoch_partitions(spark, index_root) if include_epochs else ()
     )
     stamp = (
-        "pq_codes_validated",
-        index_root,
         version,
         epochs,
         # purge marker: a same-name purge rewrite changes row content
         # without changing the epoch name set, so the sequence file is
         # the stamp's only view of it (purge_pq_index bumps it)
         _pq_purge_seq(spark, index_root),
-        bool(allow_drift),
-        None if allow_drift else float(floor),
     )
 
     def _build_codes():
         # read the STAMPED partitions explicitly (basePath keeps the
-        # epoch hive column), not the whole directory — ADVICE r15: an
+        # epoch hive column), not the whole directory: an
         # epoch committed between the stamp listing and a directory
         # re-scan would be served under the older stamp for that call;
         # pinning the read to the listed partitions makes the stamp,
@@ -2782,19 +2726,18 @@ def ivf_pq_codes_df(
         )
         return c, _pq_codes_row_count(spark, index_root, epochs)
 
-    # PLAN memoized per stamp (r17, guide §1.2 driver overhead): a
-    # query service re-enters this loader per request batch, and
-    # rebuilding the identical read (directory listing + schema
-    # resolution + union + validation, all py4j round trips) per call
-    # was measurable serve latency. The stamp addresses the underlying
-    # bytes exactly as for validation (content-addressed base,
-    # append-only epoch name set, purge sequence), so reusing the plan
-    # handle can never serve rows the stamp does not cover; the
-    # validation itself now runs inside the same memo — one entry, one
-    # lifecycle (it previously had its own memo under the same key
-    # components).
-    codes, n_codes = memo_once(
-        spark, ("ivf_pq_codes_plan",) + stamp, _build_codes
+    # PLAN memoized with the stamp as its version: a query service
+    # re-enters this loader per request batch, and rebuilding the
+    # identical read (directory listing + schema resolution + union +
+    # validation, all py4j round trips) per call is measurable serve
+    # latency. The stamp addresses the underlying bytes exactly as for
+    # validation (content-addressed base, append-only epoch name set,
+    # purge sequence), so reusing the plan handle can never serve rows
+    # the stamp does not cover; the validation runs inside the same
+    # memo — one entry, one lifecycle.
+    policy = (bool(allow_drift), None if allow_drift else float(floor))
+    codes, n_codes = memo(
+        spark, ("ivf_pq_codes_plan", index_root, *policy), stamp, _build_codes
     )
     # cluster shards by inverted list ONLY when the scan arrives
     # under-split (spread_small_input's gate): the persisted layout is
@@ -3107,24 +3050,19 @@ def _prepare_serve_codes(
             eligible.select("vec_id").distinct(), "vec_id", "left_semi"
         )
     if label_of is not None:
-        # distinct mirrors the eligible path (ADVICE r14): a label_of
-        # with duplicate (vec_id, label) rows would otherwise duplicate
+        # distinct mirrors the eligible path: a label_of with
+        # duplicate (vec_id, label) rows would otherwise duplicate
         # code rows AFTER the loader's vec_id-uniqueness probe already
         # ran, yielding duplicate (qid, nid) candidates. Rows that
         # duplicate a vec_id with CONFLICTING labels (labels must be a
         # function of vec_id) are REFUSED by one aggregate probe
-        # (ADVICE r15 — previously a documented-but-unchecked caller
-        # contract), memoized on label_of's analyzed plan so a service
-        # passing the same mapping per request batch pays it once per
-        # session; a caller that mutates the data UNDER an identical
-        # plan re-probes only on restart — the deliberate trade, same
-        # class as the epoch stamp but explicitly weaker (plans don't
-        # fingerprint content), and strictly safer than the old
-        # no-probe contract.
-        from .util import memo_once
-
+        # memoized per index with label_of's analyzed plan as the
+        # version, so a service passing the same mapping per request
+        # batch pays it once per session. A plan does not fingerprint
+        # content: a caller that mutates the data UNDER an identical
+        # plan re-probes only after memo_clear or a restart.
         labs = label_of.select("vec_id", "label").distinct()
-        plan_key = label_of._jdf.queryExecution().analyzed().toString()
+        plan = label_of._jdf.queryExecution().analyzed().toString()
 
         def _probe_labels() -> bool:
             bad = labs.groupBy("vec_id").count().filter("count > 1").head(1)
@@ -3138,7 +3076,7 @@ def _prepare_serve_codes(
                 )
             return True
 
-        memo_once(spark, ("label_of_unique", plan_key), _probe_labels)
+        memo(spark, ("label_of_unique", index_root), plan, _probe_labels)
         codes_df = codes_df.join(labs, "vec_id")
     if eligible is not None or label_of is not None:
         # same gate as the no-filter path: the join output is correct
@@ -3581,7 +3519,7 @@ def _pq_inc_fixture_root(spark: SparkSession, sf_dir: str) -> str:
         finally:
             shutil.rmtree(workdir, ignore_errors=True)
 
-    fp = _table_fingerprint(table_path(sf_dir, "embeddings"), spark)
+    (fp,) = fixture_version(spark, sf_dir, "embeddings")
     return persisted_artifact(
         spark, "pq_inc_index", sf_dir, f"{fp}-pb{_PQ_LIST_BUCKETS}", build
     )
@@ -4808,12 +4746,18 @@ def embed_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - F.col("svi") * F.col("svj")
                 ).alias("num"),
             )
+            .cache()
         )
 
     # d(d+1)/2 scalar cells (2080 at d=64) referenced three times (main
-    # branch + both diag broadcasts) — cache_once so the corpus-scan
-    # product pipeline runs once, not three times
-    nums = cache_once(spark, ("dim_cov_nums", sf_dir), _build_nums)
+    # branch + both diag broadcasts) — memoized and cached so the
+    # corpus-scan product pipeline runs once, not three times
+    nums = memo(
+        spark,
+        ("dim_cov_nums", sf_dir),
+        fixture_version(spark, sf_dir, "embeddings"),
+        _build_nums,
+    )
     diag = nums.filter(F.col("i") == F.col("j")).select(
         F.col("i").alias("k"), F.col("num").alias("dnum")
     )

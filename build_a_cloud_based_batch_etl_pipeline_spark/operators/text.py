@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..queries import query
-from .util import cache_once, memo_once, r4, seq1, spread_small_input, t
+from .util import fixture_version, memo, r4, seq1, spread_small_input, t
 
 # Deterministic stopword lists for the language-ID heuristic.
 _LANG_STOPWORDS = {
@@ -711,10 +711,12 @@ def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collapses the word stream before the term shuffle). Counters, the
     # per-term bucket lookups, and the corpus total all derive from this
     # distinct-term table, so the word stream is exploded exactly once.
-    term_counts = cache_once(
+    version = fixture_version(spark, sf_dir, "documents")
+    term_counts = memo(
         spark,
         ("cms_term_counts", sf_dir),
-        lambda: occ.groupBy("term").agg(F.count(F.lit(1)).alias("cnt")),
+        version,
+        lambda: occ.groupBy("term").agg(F.count(F.lit(1)).alias("cnt")).cache(),
     )
 
     def bucket(d: int):
@@ -744,7 +746,7 @@ def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row 0's cell sum IS the corpus occurrence total
         return cells, sum(cells[:_CMS_WIDTH])
 
-    cells, total = memo_once(spark, ("cms_sketch", sf_dir), fill_sketch)
+    cells, total = memo(spark, ("cms_sketch", sf_dir), version, fill_sketch)
     # exact-rational ceil(total * frac): float multiply rounds (e.g.
     # 300 * 0.01 -> 3.0000000000000004 -> ceil 4), and the DuckDB oracle
     # computes the threshold in DECIMAL
@@ -1082,18 +1084,20 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-aggregated them back, shuffling 3x the vocabulary to recover 3
     numbers the window had already computed."""
     docs = t(spark, sf_dir, "documents")
-    counts = cache_once(
+    version = fixture_version(spark, sf_dir, "documents")
+    counts = memo(
         spark,
         ("vocab_counts", sf_dir),
-        lambda: docs.select(
-            F.explode(F.split("text", " ")).alias("term")
-        )
+        version,
+        lambda: docs.select(F.explode(F.split("text", " ")).alias("term"))
         .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c")),
+        .agg(F.count(F.lit(1)).alias("c"))
+        .cache(),
     )
-    n, n_terms = memo_once(
+    n, n_terms = memo(
         spark,
         ("vocab_totals", sf_dir),
+        version,
         lambda: counts.agg(
             F.sum("c").alias("n"), F.count(F.lit(1)).alias("n_terms")
         ).first()[:2],
@@ -1933,6 +1937,7 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("g.w1", "g.w2")
             .groupBy("w1", "w2")
             .agg(F.count(F.lit(1)).alias("c_xy"))
+            .cache()
         )
 
     # cache the pair dictionary: five consumers (uni, a, b, both totals,
@@ -1940,9 +1945,8 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only collapsed one of the duplicate subtrees in the AQE plan. The
     # cached table is pair-dictionary-bounded (vocabulary^2 worst case,
     # Zipf-small in practice), never corpus-sized.
-    grouped = cache_once(
-        spark, ("pmi_pair_dict", sf_dir), _build_pair_dict
-    )
+    version = fixture_version(spark, sf_dir, "documents")
+    grouped = memo(spark, ("pmi_pair_dict", sf_dir), version, _build_pair_dict)
     uni = grouped.groupBy("w1").agg(F.sum("c_xy").alias("c"))
     n_tok = uni.agg(F.sum("c").cast("bigint").alias("n"))
     pairs_only = grouped.filter(F.col("w2").isNotNull())
@@ -2047,26 +2051,28 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus is scanned once; the cached rows are vocabulary-bounded
     # (|sources| x |terms|), the same dictionary text_collocation_pmi
     # already caches.
-    c = cache_once(
+    version = fixture_version(spark, sf_dir, "documents")
+    c = memo(
         spark,
         ("jsd_term_counts", sf_dir),
+        version,
         lambda: (
             docs.select(
                 "source", F.explode(F.split("text", " ")).alias("term")
             )
             .groupBy("source", "term")
             .agg(F.count(F.lit(1)).alias("c"))
+            .cache()
         ),
     )
     # |sources| rows, referenced four times (two broadcasts + the pair
     # enumeration's both sides) — cache so each reference reads the
     # tiny cached result instead of re-aggregating the dictionary
-    tot = cache_once(
+    tot = memo(
         spark,
         ("jsd_source_totals", sf_dir),
-        lambda: c.groupBy("source").agg(
-            F.sum("c").cast("bigint").alias("n")
-        ),
+        version,
+        lambda: c.groupBy("source").agg(F.sum("c").cast("bigint").alias("n")).cache(),
     )
     a = c.select(
         F.col("source").alias("source_a"),
@@ -2201,12 +2207,9 @@ def _textrank_graph(spark: SparkSession, sf_dir: str):
     pruning) and scanned by every TextRank iteration. outw carries
     (src, dst, wt, wdeg) directed rows; nodes carries every kept
     content word (including isolated ones, which hold base rank)."""
-    import os
-
-    from .similarity import _table_fingerprint
     from .util import persisted_artifact
 
-    fp = _table_fingerprint(os.path.join(sf_dir, "documents.parquet"), spark)
+    (fp,) = fixture_version(spark, sf_dir, "documents")
 
     def build(tmp: str) -> None:
         docs = t(spark, sf_dir, "documents")
@@ -2411,7 +2414,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: tokenization is one projected scan + per-doc lead()
     windows (the dedup_repeated_spans window class — never global), run
-    ONCE per corpus version into a memo_once-persisted parquet graph
+    ONCE per corpus version into a persisted parquet graph
     artifact (the _edges_parquet discipline — without it the 3 unrolled
     iterations re-print/re-plan the whole corpus-scan subtree per
     reference); every iteration then costs O(|V| + |E|) joins over the
@@ -2430,7 +2433,7 @@ _BPE_K = 16  # merges learned and applied — bounded, deterministic
 def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-word table (w, c, s): corpus frequency and the dotted
     symbol string '.c1.c2...cn.' BPE operates on — cached once per
-    (session, sf). Words are restricted to ^[a-z]+$ so every symbol is
+    (session, sf, documents version). Words are restricted to ^[a-z]+$ so every symbol is
     regex-literal-safe and the '.' separator can never collide with a
     symbol character; non-letter 'words' are excluded from the
     subword model (and from the token budgets built on it) on BOTH
@@ -2446,9 +2449,11 @@ def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn(
                 "s", F.concat(F.lit("."), F.regexp_replace("w", "(.)", "$1."))
             )
+            .cache()
         )
 
-    return cache_once(spark, ("bpe_vocab", sf_dir), build)
+    version = fixture_version(spark, sf_dir, "documents")
+    return memo(spark, ("bpe_vocab", sf_dir), version, build)
 
 
 def _bpe_merge_regex(a: str, b: str) -> tuple[str, str]:
@@ -2468,8 +2473,8 @@ def bpe_merges(
     """Train a bounded BPE merge table (Sennrich et al. 2016, top-k
     merges, deterministic tie-break count DESC then pair ASC): k rounds
     of [count adjacent symbol pairs weighted by word frequency -> take
-    the argmax -> apply it to every word]. memo_once-cached per
-    (session, sf, k).
+    the argmax -> apply it to every word]. Memoized per (session, sf,
+    k), with the documents table's fingerprint as the version.
 
     Scale shape: the ENTIRE loop runs over the cached distinct-word
     table (vocabulary-bounded — the corpus collapses to (word, count)
@@ -2501,7 +2506,8 @@ def bpe_merges(
             cur = cur.withColumn("s", F.regexp_replace("s", pat, rep))
         return merges
 
-    return memo_once(spark, ("bpe_merges", sf_dir, k), train)
+    version = fixture_version(spark, sf_dir, "documents")
+    return memo(spark, ("bpe_merges", sf_dir, k), version, train)
 
 
 def _bpe_pair_counts(cur: DataFrame, weight=None) -> DataFrame:
@@ -2737,7 +2743,8 @@ def bpe_merges_delta(
             )
         return merges
 
-    return memo_once(spark, ("bpe_merges_delta", sf_dir, k), train)
+    version = fixture_version(spark, sf_dir, "documents")
+    return memo(spark, ("bpe_merges_delta", sf_dir, k), version, train)
 
 
 # Trainer crossover, measured (r14 k-sweep on the 60k-word fixture,

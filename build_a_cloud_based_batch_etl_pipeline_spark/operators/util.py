@@ -5,8 +5,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsio import table_fingerprint
 from ..schemas import BROADCAST_TABLES
-from ..sources import load_table
+from ..sources import load_table, table_path
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -266,90 +267,62 @@ def spread_small_input(
     return df.repartition(par, *key)
 
 
-_CACHE_ONCE: dict[tuple, DataFrame] = {}
+_MEMO: dict[tuple, tuple] = {}
 
 
-def cache_once(spark: SparkSession, key: tuple, build) -> DataFrame:
-    """Per-application memo for `.cache()`'d intermediates.
+def memo(spark: SparkSession, key: tuple, version, build):
+    """Per-application memo for plans, cached frames and driver-side
+    artifacts, with one staleness rule: an entry is served only while
+    `version` equals the version it was built at.
 
-    A `.cache()` inside an operator function registers a FRESH cache entry
-    per invocation (each call builds a new logical plan, so Spark's cache
-    manager cannot dedup them), and bench runs every query 3x — without
-    this memo the duplicate copies accumulate and lean on LRU eviction
-    (ADVICE r3). Keyed by (applicationId, *key) so a restarted session
-    never reuses a dead plan; entries are handles, not data — executor
-    memory still holds exactly one copy per key.
+    `key` names what is memoized and where (e.g. ("mh_bands", sf_dir));
+    `version` is the fsio.table_fingerprint of each table `build` reads
+    (`fixture_version`), or a validation stamp built from fingerprints.
+    A rewritten input therefore misses: the old value is unpersisted if
+    it is a DataFrame, `build()` runs, and its result replaces the
+    entry, so each key holds one live entry. Caching is explicit in
+    `build` (`lambda: df.cache()`) — a `.cache()` per call would
+    register a fresh cache entry per invocation, since each call builds
+    a new logical plan — and plan-only memos return an uncached plan.
+    Checks that must fire on every call (footer caps, empty tables,
+    stale indexes, query caps) belong outside `build`.
 
-    Entries for dead applications are dropped on insert (their plans are
-    unusable and their executors are gone, so eviction is free), keeping
-    the dict bounded to the live application in long-lived driver
-    processes (ADVICE r4). `cache_once_clear()` additionally unpersists
-    live entries for harnesses that finish a query family early.
-    """
+    Keyed by (applicationId, *key), so a restarted session never
+    reuses a dead plan; entries of dead applications are dropped on
+    insert (their executors are gone), bounding the dict to the live
+    application in long-lived driver processes."""
     app = spark.sparkContext.applicationId
-    for stale in [k for k in _CACHE_ONCE if k[0] != app]:
-        del _CACHE_ONCE[stale]
+    for dead in [k for k in _MEMO if k[0] != app]:
+        del _MEMO[dead]
     full = (app, *key)
-    df = _CACHE_ONCE.get(full)
-    if df is None:
-        df = build().cache()
-        _CACHE_ONCE[full] = df
-    return df
+    hit = _MEMO.get(full)
+    if hit is None or hit[0] != version:
+        _unpersist(hit[1] if hit else None)
+        _MEMO[full] = (version, build())
+    return _MEMO[full][1]
 
 
-def cache_once_clear(spark: SparkSession | None = None) -> None:
-    """Unpersist and forget every cache_once entry (current application
-    only when `spark` is given, else all). For bench/test harnesses that
-    want executor storage back before the application ends."""
+def memo_clear(spark: SparkSession | None = None) -> None:
+    """Unpersist and forget every memo entry (current application only
+    when `spark` is given, else all): the hook for harnesses that want
+    cold plans or executor storage back before the application ends."""
     app = spark.sparkContext.applicationId if spark is not None else None
-    for k in list(_CACHE_ONCE):
-        if app is None or k[0] == app:
-            df = _CACHE_ONCE.pop(k)
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # application already stopped; nothing to release
+    for k in [k for k in _MEMO if app is None or k[0] == app]:
+        _unpersist(_MEMO.pop(k)[1])
 
 
-_MEMO_ONCE: dict[tuple, object] = {}
-# r17: 8 -> 16. The serve paths now hold ~3 entries per live index
-# (codebook arrays, validated codes plan, artifact dir) and the bench
-# alternates several index-backed rows; at 8 the FIFO evicted a live
-# row's entries mid-rotation and re-paid the validation aggregates.
-# Entries are small (plan handles, ~0.6 MB codebook arrays), so 16 is
-# still a few MB of driver memory at worst.
-_MEMO_ONCE_MAX = 16
+def _unpersist(value) -> None:
+    if isinstance(value, DataFrame):
+        try:
+            value.unpersist()
+        except Exception:
+            pass  # application already stopped; nothing to release
 
 
-def memo_once(spark: SparkSession, key: tuple, build):
-    """Per-application memo for driver-side artifacts that are NOT
-    DataFrames (trained PQ codebooks, built index dirs) — the
-    cache_once lifecycle discipline (VERDICT r5 item 8) applied to
-    plain objects: keyed (applicationId, *key) so a restarted session
-    never reuses dead state, dead-application entries dropped on
-    insert, `memo_once_clear()` as the one forget hook. Unlike
-    cache_once entries (plan handles), these artifacts hold real driver
-    memory, so the dict is additionally FIFO-bounded. Callers put a
-    content fingerprint in the key (similarity._table_fingerprint) so a
-    rewritten source table misses instead of serving stale artifacts."""
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _MEMO_ONCE if k[0] != app]:
-        del _MEMO_ONCE[stale]
-    full = (app, *key)
-    if full not in _MEMO_ONCE:
-        while len(_MEMO_ONCE) >= _MEMO_ONCE_MAX:
-            _MEMO_ONCE.pop(next(iter(_MEMO_ONCE)))
-        _MEMO_ONCE[full] = build()
-    return _MEMO_ONCE[full]
-
-
-def memo_once_clear(spark: SparkSession | None = None) -> None:
-    """Forget every memo_once artifact (current application only when
-    `spark` is given, else all)."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for k in list(_MEMO_ONCE):
-        if app is None or k[0] == app:
-            del _MEMO_ONCE[k]
+def fixture_version(spark: SparkSession, sf_dir: str, *names: str) -> tuple:
+    """memo version of a build that reads the named fixture tables:
+    their fsio.table_fingerprint, in order."""
+    return tuple(table_fingerprint(table_path(sf_dir, n), spark) for n in names)
 
 
 _ARTIFACT_MARKER = "_ARTIFACT_OK"
@@ -373,10 +346,9 @@ def _artifacts_base(spark: SparkSession) -> str:
 def persisted_artifact(
     spark: SparkSession, kind: str, sf_dir: str, fingerprint: str, build
 ) -> str:
-    """Content-addressed on-disk artifact directory (ADVICE r9: these
-    used to live in memo_once'd tempfile.mkdtemp dirs, so memo eviction
-    or a new application silently rebuilt them — orphaning the old dir
-    — and 'persisted' artifacts never actually survived a session).
+    """Content-addressed on-disk artifact directory that survives the
+    session: a new application reuses it, and neither memo eviction
+    nor a restart orphans a built directory.
 
     Layout: <warehouse>/_artifacts/<kind>-<sf tag>/<fingerprint> (the
     sf tag keeps sf0.01 and sf0.1 artifacts in separate prune scopes —
@@ -395,14 +367,16 @@ def persisted_artifact(
       same <kind> are pruned at publish time, bounding disk to one
       live artifact per kind.
 
-    The fs probe is wrapped in memo_once so warm in-session calls skip
-    the stat; memo_once_clear()/artifact_clear() force a re-probe /
-    re-build respectively (the perturb gate clears both so artifact
-    builds are exercised under every shuffle-partition setting).
+    The fs probe is memoized per (kind, tag) with the fingerprint as
+    its version (util.memo), so warm in-session calls skip the stat and
+    a new fingerprint re-probes; memo_clear()/artifact_clear() force a
+    re-probe / re-build respectively (the perturb gate clears both so
+    artifact builds are exercised under every shuffle-partition
+    setting).
 
     All filesystem traffic goes through the Hadoop FileSystem API
     (fsio.Fs) so the artifact lifecycle runs unchanged when the
-    warehouse dir is an object-store URI (VERDICT r12 item 1); the
+    warehouse dir is an object-store URI; the
     no-replace publish uses Fs.rename_no_nest because Hadoop rename
     onto an existing directory NESTS instead of failing like
     os.rename."""
@@ -421,8 +395,8 @@ def persisted_artifact(
         if fs.is_file(marker):
             return root
         if fs.is_dir(root):  # torn build — never serve it
-            # ADVICE r10: re-probe the marker immediately before the
-            # delete — a concurrent builder's atomic rename may have
+            # re-probe the marker immediately before the delete — a
+            # concurrent builder's atomic rename may have
             # published between the is_file miss above and here, and the
             # marker lands inside the renamed dir, so marker-present
             # means complete.
@@ -452,16 +426,16 @@ def persisted_artifact(
                 # another builder may still be writing here — only
                 # reap tmps that are clearly abandoned (crashed build).
                 # Freshness = the NEWEST mtime anywhere in the tree, not
-                # the tmp root's (ADVICE r10: writes into subdirectories
-                # — e.g. parquet part files — do not touch the root's
-                # mtime, so a long live build looked abandoned).
+                # the tmp root's: writes into subdirectories — e.g.
+                # parquet part files — do not touch the root's mtime, so
+                # a long live build would look abandoned.
                 try:
                     import time
 
                     if time.time() - fs.newest_mtime(p) < 3600:
                         continue
                 except Exception:
-                    # broad on purpose (ADVICE r13): a concurrent
+                    # broad on purpose: a concurrent
                     # builder renaming its tmp away between the listing
                     # and this probe surfaces as Py4JJavaError
                     # (FileNotFoundException), NOT OSError — any probe
@@ -477,29 +451,28 @@ def persisted_artifact(
                 continue
         return root
 
-    return memo_once(spark, ("persisted_artifact", kind, tag, fingerprint), resolve)
+    return memo(spark, ("persisted_artifact", kind, tag), fingerprint, resolve)
 
 
 def artifact_clear(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Delete persisted artifact dirs AND the in-session memo AND the
-    cache_once plan handles — the 'rebuild everything from source' hook
-    the perturb sweep uses so the heavy artifact-build subtrees re-run
+    """Delete persisted artifact dirs AND every in-session memo entry
+    (util.memo_clear) — the 'rebuild everything from source' hook the
+    perturb sweep uses so the heavy artifact-build subtrees re-run
     under each partitioning.
 
-    cache_once entries are cleared too (r17): a cached frame DERIVED
+    The memo is cleared with the dirs because a cached frame DERIVED
     FROM an artifact (dedup_pagerank's deg/outdeg over the mh_edges
-    parquet) holds the old build's file listing in its plan — after the
+    parquet) holds the old build's file listing in its plan: after the
     wipe, the content-addressed rebuild lands at the SAME dir with NEW
-    part-file names, and the stale handle fails with
-    FAILED_READ_FILE.FILE_NOT_EXIST (caught by the first post-r16-HEAD
-    perturb run; the r16 gates predated the commit that introduced the
-    caching). Wiping artifacts while keeping plans built on them was
-    never a consistent state.
+    part-file names (and the same fingerprint version), and the stale
+    handle would fail with FAILED_READ_FILE.FILE_NOT_EXIST. Wiping
+    artifacts while keeping plans built on them is never a consistent
+    state.
 
-    sf_dir scopes the wipe to that fixture's `<kind>-<tag>` dirs
-    (ADVICE r10: the unscoped rmtree crossed the per-SF prune boundary
-    the persisted_artifact docstring promises — a concurrent bench/check
-    session on the OTHER sf lost its live artifacts mid-query). None
+    sf_dir scopes the wipe to that fixture's `<kind>-<tag>` dirs, so a
+    concurrent bench/check session on the OTHER sf keeps its live
+    artifacts (the per-SF prune boundary persisted_artifact
+    promises). None
     keeps the full wipe for single-session test teardown. Deletes go
     through the Hadoop FileSystem API (fsio.Fs) like the rest of the
     artifact lifecycle."""
@@ -518,16 +491,15 @@ def artifact_clear(spark: SparkSession, sf_dir: str | None = None) -> None:
         except FileNotFoundError:
             entries = []
         for entry in entries:
-            # Exact-tag match (ADVICE r11: a bare endswith("-{tag}") let
-            # tag 'a' wipe 'kind-data-a'). Kind names are dash-free by
+            # Exact-tag match (a bare endswith("-{tag}") would let tag
+            # 'a' wipe 'kind-data-a'). Kind names are dash-free by
             # construction (snake_case identifiers: 'pq_index',
             # 'mh_index', 'eval_gram_index', ...), so `<kind>-<tag>`
             # splits unambiguously on the FIRST dash even when the tag
             # itself contains dashes.
             if "-" in entry and entry.split("-", 1)[1] == tag:
                 fs.delete(child(base, entry))
-    memo_once_clear(spark)
-    cache_once_clear(spark)
+    memo_clear(spark)
 
 
 def seq1(stop: Column) -> Column:

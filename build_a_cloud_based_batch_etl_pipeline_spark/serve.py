@@ -36,7 +36,8 @@ src/load/main.py:58-84):
   "results": [{"qid": ..., "nid": ..., "adc_score": ...}, ...]}``;
   400 with the standard envelope on a malformed body (missing/ragged
   queries, non-numeric k) and on an over-cap batch — that one names
-  serve_ann_ivf_pq_tiled, the documented tiling path; 500 envelope
+  serve_ann_ivf_pq_tiled, the documented tiling path; 413 envelope,
+  before any read, on a body larger than _MAX_BODY_BYTES; 500 envelope
   when the serve itself refuses (torn index, drifted epochs,
   mixed-codebook codes).
 
@@ -59,6 +60,14 @@ from pyspark.sql import SparkSession
 
 from . import ingest, job
 from .config import IngestConfig
+
+
+# Request-body cap on every route, refused with 413 before the body is
+# read. Sized for the largest legal /ann body: _MAX_QUERY_ROWS (100k)
+# queries of _DIM (64) floats, each float at most 24 JSON characters
+# plus a ", " separator, plus ~64 bytes of per-query framing — about
+# 173 MB — so a full batch fits with headroom.
+_MAX_BODY_BYTES = 256 << 20
 
 
 def _parse_pubsub_envelope(body: bytes) -> tuple[str, str] | None:
@@ -158,6 +167,10 @@ def make_handler(
                     400,
                     {"success": False, "error": "Invalid Content-Length"},
                 )
+                return
+            if n > _MAX_BODY_BYTES:
+                err = f"request body over the {_MAX_BODY_BYTES}-byte cap"
+                self._reply(413, {"success": False, "error": err})
                 return
             body = self.rfile.read(n) if n else b""
             if self.path == "/extract":

@@ -241,24 +241,41 @@ def test_propagate_min_label_escalates_long_chains_to_doubling(spark):
 
 
 def test_cache_once_memoizes_per_key(spark):
-    """Repeat invocations with the same key must return the SAME cached
-    DataFrame handle (one cache entry, built once — bench runs each
-    query 3x; ADVICE r3), while a different key builds fresh."""
-    from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import cache_once
+    """Repeat invocations with the same key and version must return the
+    SAME cached DataFrame handle (one cache entry, built once — bench
+    runs each query 3x), while a different key builds fresh. The same
+    key at a NEW version (a rewritten input) builds once, leaves one
+    entry under the key, and unpersists the superseded frame."""
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators import util
 
     builds = {"n": 0}
 
     def build():
         builds["n"] += 1
-        return spark.range(5).toDF("doc_id")
+        # a distinct plan per build, so each frame's storage level is
+        # its own (Spark looks cached data up by plan)
+        return spark.range(5).toDF("doc_id").withColumn(
+            "build", F.lit(builds["n"])
+        ).cache()
 
-    a = cache_once(spark, ("cache_once_test", "k1"), build)
-    b = cache_once(spark, ("cache_once_test", "k1"), build)
-    c = cache_once(spark, ("cache_once_test", "k2"), build)
-    assert a is b, "same key must reuse the memoized DataFrame"
+    a = util.memo(spark, ("memo_test", "k1"), "v1", build)
+    b = util.memo(spark, ("memo_test", "k1"), "v1", build)
+    c = util.memo(spark, ("memo_test", "k2"), "v1", build)
+    assert a is b, "same key and version must reuse the memoized DataFrame"
     assert c is not a
     assert builds["n"] == 2, "builder must run once per distinct key"
     assert a.count() == 5 and c.count() == 5
+
+    d = util.memo(spark, ("memo_test", "k1"), "v2", build)
+    assert util.memo(spark, ("memo_test", "k1"), "v2", build) is d
+    assert d is not a
+    assert builds["n"] == 3, "a new version must build exactly once"
+    app = spark.sparkContext.applicationId
+    k1 = [k for k in util._MEMO if k[:3] == (app, "memo_test", "k1")]
+    assert k1 == [(app, "memo_test", "k1")], "one live entry per key"
+    assert not a.storageLevel.useMemory, "superseded frame must be unpersisted"
+    assert d.storageLevel.useMemory and c.storageLevel.useMemory
+    util.memo_clear(spark)
 
 
 def test_pointer_doubling_handles_large_diameter_in_log_rounds(spark):
@@ -306,21 +323,80 @@ def test_containment_catches_excerpt_that_jaccard_misses(spark):
 
 def test_cache_once_evicts_dead_applications_and_clears(spark):
     """Entries keyed to a dead applicationId are dropped on the next
-    insert (their plans are unusable), and cache_once_clear unpersists
-    and forgets live entries (ADVICE r4)."""
+    insert (their plans are unusable), and memo_clear unpersists and
+    forgets live entries."""
     from build_a_cloud_based_batch_etl_pipeline_spark.operators import util
 
-    util._CACHE_ONCE[("dead-app-id", "stale")] = spark.range(1)
-    live = util.cache_once(
-        spark, ("cache_once_evict_test",), lambda: spark.range(3)
+    util._MEMO[("dead-app-id", "stale")] = ("v", spark.range(1))
+    live = util.memo(
+        spark, ("memo_evict_test",), "v", lambda: spark.range(3).cache()
     )
-    assert ("dead-app-id", "stale") not in util._CACHE_ONCE
+    assert ("dead-app-id", "stale") not in util._MEMO
     assert live.count() == 3
 
-    util.cache_once_clear(spark)
+    util.memo_clear(spark)
     app = spark.sparkContext.applicationId
-    assert not any(k[0] == app for k in util._CACHE_ONCE)
+    assert not any(k[0] == app for k in util._MEMO)
     assert not live.storageLevel.useMemory, "clear must unpersist"
+
+
+def test_memo_invalidates_on_input_rewrite(spark, sf_dir, tmp_path):
+    """A memoized plan or cached frame is served only while the tables
+    its build reads are unchanged. Three rewrites of a fixture copy:
+    documents.parquet replaced outside Spark (pyarrow, as another
+    process would) under dedup_minhash_pairs and text_heavy_hitters_cms,
+    and nation.parquet overwritten by Spark in this session under
+    dq_referential_integrity. Each warm answer after the rewrite must
+    equal the answer after memo_clear, while a memo over tables the
+    rewrite left untouched is still served (same entry, no rebuild)."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators import dq, text, util
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, sf)
+    app = spark.sparkContext.applicationId
+
+    def run():
+        return {
+            "pairs": sorted(map(tuple, dedup.dedup_minhash_pairs(spark, sf).collect())),
+            "hh": sorted(map(tuple, text.text_heavy_hitters_cms(spark, sf).collect())),
+            "ri": sorted(map(tuple, dq.dq_referential_integrity(spark, sf).collect())),
+        }
+
+    def entry(name):
+        return util._MEMO[(app, name, sf)]
+
+    util.memo_clear(spark)
+    before = run()
+
+    # 1+2. documents replaced outside Spark: the dedup and CMS memos
+    # rebuild; the dq plan (TPC-H tables only) is still served
+    dq_plan = entry("dq_ref_integrity_plan")
+    docs = pq.read_table(f"{sf}/documents.parquet")
+    pq.write_table(docs.slice(0, docs.num_rows * 3 // 5), f"{sf}/documents.parquet")
+    warm = run()
+    assert entry("dq_ref_integrity_plan") is dq_plan, "untouched tables must hit"
+    util.memo_clear(spark)
+    cold = run()
+    assert warm == cold
+    assert warm["pairs"] != before["pairs"] and warm["hh"] != before["hh"]
+
+    # 3. nation overwritten by Spark: the dq plan re-plans; the
+    # documents-only memos are still served
+    bands, cms = entry("mh_bands"), entry("cms_sketch")
+    nation = spark.createDataFrame(
+        spark.read.parquet(f"{sf}/nation.parquet").filter("n_nationkey < 20").toPandas()
+    )
+    nation.write.mode("overwrite").parquet(f"{sf}/nation.parquet")
+    warm = run()
+    assert entry("mh_bands") is bands and entry("cms_sketch") is cms
+    util.memo_clear(spark)
+    assert run() == warm
+    assert warm["ri"] != cold["ri"]
+    util.memo_clear(spark)
 
 
 def test_repeated_spans_planted_fixture(spark, monkeypatch):

@@ -102,16 +102,16 @@ def test_fs_parquet_row_count_matches_footer(spark, tmp_path):
     assert total == 123
 
 
-def test_fingerprint_and_footer_guard_over_file_uri(spark, tmp_path):
+def test_fingerprint_and_footer_guard_over_file_uri(spark, sf_dir, tmp_path):
     """The footer-count cap guard and the artifact content fingerprint
     must work on non-local (Hadoop-scheme) table paths: before r13 an
     object-store table counted None (silently degrading the fail-fast
     cap to the bounded fallback) and fingerprinted as 'missing' — every
     such table COLLIDED on one artifact dir, the one way a
     content-addressed artifact could be served stale."""
+    from build_a_cloud_based_batch_etl_pipeline_spark.fsio import table_fingerprint
     from build_a_cloud_based_batch_etl_pipeline_spark.operators.similarity import (
         _parquet_num_rows,
-        _table_fingerprint,
     )
 
     local = str(tmp_path / "t")
@@ -123,20 +123,32 @@ def test_fingerprint_and_footer_guard_over_file_uri(spark, tmp_path):
     assert _parquet_num_rows(uri, spark) == 321
     assert _parquet_num_rows(uri) is None  # no spark handle: old behavior
 
-    fp_uri = _table_fingerprint(uri, spark)
+    fp_uri = table_fingerprint(uri, spark)
     assert fp_uri != "missing" and len(fp_uri) == 16
-    assert _table_fingerprint(uri, spark) == fp_uri  # deterministic
+    assert table_fingerprint(uri, spark) == fp_uri  # deterministic
     # distinct tables must not collide (the old 'missing' collision)
     local2 = str(tmp_path / "t2")
     spark.range(5).write.parquet(local2)
-    assert _table_fingerprint("file:" + local2, spark) != fp_uri
+    assert table_fingerprint("file:" + local2, spark) != fp_uri
     # rewriting the table changes the fingerprint
     spark.range(99).repartition(2).write.mode("overwrite").parquet(local)
-    assert _table_fingerprint(uri, spark) != fp_uri
+    assert table_fingerprint(uri, spark) != fp_uri
     # genuinely absent stays 'missing'
-    assert _table_fingerprint("file:" + str(tmp_path / "nope"), spark) == "missing"
+    assert table_fingerprint("file:" + str(tmp_path / "nope"), spark) == "missing"
     # local single-file form is unchanged (persisted artifacts stay valid)
-    assert _table_fingerprint("/root/testdata/sf0.001/documents.parquet") != "missing"
+    assert table_fingerprint(f"{sf_dir}/documents.parquet") != "missing"
+
+    # golden case: every persisted artifact dir name and stored
+    # index_version IS this string, so its format is pinned byte for
+    # byte — a changed byte would orphan every on-disk index
+    gold = tmp_path / "gold"
+    (gold / "part=1").mkdir(parents=True)
+    files = {"a.parquet": b"PAR1abc", "part=1/b.parquet": b"PAR1defgh", "_SUCCESS": b""}
+    for rel, data in files.items():
+        (gold / rel).write_bytes(data)
+        os.utime(gold / rel, ns=(1_700_000_000_123_456_789,) * 2)
+    assert table_fingerprint(str(gold / "a.parquet")) == "5feb459481dd6263"
+    assert table_fingerprint(str(gold)) == "68539ff66f49e250"
 
 
 def test_zorder_maintain_over_file_uri(spark, tmp_path):

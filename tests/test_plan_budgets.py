@@ -9,26 +9,22 @@ bench regression. Fewer exchanges than recorded is fine (an
 improvement — regenerate PLANS.md to tighten the budget); more is a
 regression. Compared at sf0.01, the same scale PLANS.md is generated
 at, because join-strategy choices (and so exchange counts) are
-data-size dependent. cache_once AND memo_once state are evicted before
-EVERY query, exactly like `tools/explain.py --all --write` does when
-generating PLANS.md: committed budgets are COLD-session plans (what a
-fresh CI run sees). Comparing a warm plan against a cold budget is the
-nondeterminism that broke this gate in r6 (dedup_clusters planned 4
-exchanges warm, 6 cold); a warm MEMO is the r15 variant — whether
-bpe_merges was memoized decided whether training re-ran during plan
-construction and materialized the vocab cache_once subtree
-(pack_token_bins_bpe: 4 exchanges memoized vs 5 retrained), and memo
-FIFO eviction made that depend on registry order and artifact state."""
+data-size dependent. Every memo entry (util.memo_clear) is evicted
+before EVERY query, exactly like `tools/explain.py --all --write` does
+when generating PLANS.md: committed budgets are COLD-session plans
+(what a fresh CI run sees). A warm plan compared against a cold budget
+is nondeterministic: warm caches change Catalyst's size estimates
+(dedup_clusters can plan fewer exchanges warm than cold), and a warm
+memo decides whether bpe_merges training re-runs during plan
+construction and materializes the vocab cache (pack_token_bins_bpe
+can plan one exchange fewer memoized than retrained)."""
 
 from __future__ import annotations
 
 import re
 
 from build_a_cloud_based_batch_etl_pipeline_spark import plans
-from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import (
-    cache_once_clear,
-    memo_once_clear,
-)
+from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import memo_clear
 from build_a_cloud_based_batch_etl_pipeline_spark.queries import load_all
 
 SF_PLANS = "/root/testdata/sf0.01"
@@ -59,8 +55,7 @@ def test_no_query_exceeds_committed_shuffle_budget(spark):
     over = []
     for name, spec in registry.items():
         # cold-plan semantics, identical to PLANS.md generation
-        cache_once_clear(spark)
-        memo_once_clear(spark)
+        memo_clear(spark)
         df = spec.fn(spark, SF_PLANS)
         # identical counting to tools/explain.py summarize(): substring
         # count over executedPlan().toString()
@@ -72,7 +67,8 @@ def test_no_query_exceeds_committed_shuffle_budget(spark):
 
 
 def test_cache_once_queries_plan_identically_cold_and_warm(spark):
-    """Plan-determinism guard for the cache_once-sharing query family:
+    """Plan-determinism guard for the query family that shares memoized
+    cached subtrees (util.memo):
     the physical join strategies must be IDENTICAL whether the shared
     subtree is cold (fresh session, nothing materialized) or warm
     (another family member already ran and cached it). Without pinned
@@ -80,7 +76,7 @@ def test_cache_once_queries_plan_identically_cold_and_warm(spark):
     differs from the un-materialized plan's estimate and can flip
     broadcast<->sort-merge — which is exactly how dedup_clusters' warm-
     captured 4-exchange budget rotted against its 6-exchange cold plan
-    in r6. Any query added to the cache_once family must keep this
+    once. Any query added to the memoized-cache family must keep this
     green (pin the strategy with F.broadcast()/hints, don't rely on
     estimates)."""
     from tools.explain import summarize
@@ -95,7 +91,7 @@ def test_cache_once_queries_plan_identically_cold_and_warm(spark):
         "dedup_ngram_containment",
         "dedup_simhash",
         "dedup_semantic_keep_best",
-        # cache_once owners outside the dedup family with a
+        # memoized-cache owners outside the dedup family with a
         # single-reference cached subtree
         "text_heavy_hitters_cms",
         "dedup_embedding_lsh",
@@ -125,15 +121,15 @@ def test_cache_once_queries_plan_identically_cold_and_warm(spark):
 
     mismatches = []
     for name in family:
-        cache_once_clear(spark)
+        memo_clear(spark)
         cold = _shape(name)
-        # materialize every cache_once subtree the query registered,
+        # materialize every memoized subtree the query registered,
         # then re-plan: this is the "another query ran first" session
         registry[name].fn(spark, SF_PLANS).count()
         warm = _shape(name)
         if cold != warm:
             mismatches.append((name, cold, warm))
-    cache_once_clear(spark)
+    memo_clear(spark)
     assert not mismatches, (
         "cold/warm physical plans diverge (pin the join strategy): "
         f"{mismatches}"

@@ -161,7 +161,7 @@ def test_cms_estimation_is_join_free_single_shuffle(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, "CMS estimation must not join"
     # the one term-count exchange prints twice in a COLD plan (once in
-    # the cache_once subtree's definition, once under its scan), so the
+    # the memoized cached subtree's definition, once under its scan), so the
     # textual count is <=2 for <=1 unique shuffle
     assert plans.count_shuffles(df) <= 2
 

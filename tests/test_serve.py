@@ -190,19 +190,30 @@ def test_ann_route_malformed_and_overcap_are_400(server, ann_index, monkeypatch)
     status, env = _post(f"{base}/ann", json.dumps(ragged).encode())
     assert status == 400 and "ragged" in env["error"]
     # a non-integer or negative Content-Length: the 400 envelope, not a
-    # dropped connection or a read that blocks until the client leaves
+    # dropped connection or a read that blocks until the client leaves;
+    # a length over the body cap: the 413 envelope, answered from the
+    # header alone (no body is sent, so a server that read first would
+    # block until the timeout)
+    from build_a_cloud_based_batch_etl_pipeline_spark import serve
+
     host = urllib.parse.urlsplit(base).netloc
-    for bad in ("abc", "-1"):
+    over_cap = str(serve._MAX_BODY_BYTES + 1)
+    for bad, want, body in (("abc", 400, b"{}"), ("-1", 400, b"{}"), (over_cap, 413, None)):
         conn = http.client.HTTPConnection(host, timeout=30)
         try:
             conn.putrequest("POST", "/ann")
             conn.putheader("Content-Length", bad)
-            conn.endheaders(b"{}")
+            conn.endheaders(body)
             resp = conn.getresponse()
             status, env = resp.status, json.loads(resp.read().decode())
         finally:
             conn.close()
-        assert status == 400 and "Content-Length" in env["error"], bad
+        assert status == want and env["success"] is False, bad
+        assert ("Content-Length" if want == 400 else "cap") in env["error"], bad
+    # the cap admits a full batch at the engine's embedding width, with
+    # every float at its longest JSON form
+    worst = json.dumps({"vec_id": sim._MAX_QUERY_ROWS, "embedding": [-1.2345678901234567e-300] * sim._DIM})
+    assert (len(worst) + 2) * sim._MAX_QUERY_ROWS + 1024 < serve._MAX_BODY_BYTES
 
     # over-cap: 400 with the tiling hint, BEFORE any Spark work
     monkeypatch.setattr(sim, "_MAX_QUERY_ROWS", 2)

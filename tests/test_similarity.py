@@ -474,11 +474,11 @@ def test_pq_adc_score_ties_resolve_to_smallest_nid_across_chunks(
 
     def neighbors(chunk):
         from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import (
-            memo_once_clear,
+            memo_clear,
         )
 
         monkeypatch.setattr(similarity, "_ADC_CHUNK", chunk)
-        memo_once_clear(spark)
+        memo_clear(spark)
         out = REGISTRY["embed_ann_pq"].fn(spark, sf).collect()
         return sorted((r.qid, r.nid, r.adc_score) for r in out)
 

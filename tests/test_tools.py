@@ -111,16 +111,16 @@ def test_persisted_artifact_lifecycle(spark, tmp_path, monkeypatch):
     assert util.persisted_artifact(spark, "k", sf, "fp1", build_factory("b")) == r1
     assert builds == ["a"]
     # 'new session': memo gone, artifact on disk reused, not rebuilt
-    util.memo_once_clear(spark)
+    util.memo_clear(spark)
     assert util.persisted_artifact(spark, "k", sf, "fp1", build_factory("c")) == r1
     assert builds == ["a"]
     # torn build (marker missing) is rebuilt, never served
-    util.memo_once_clear(spark)
+    util.memo_clear(spark)
     os.remove(os.path.join(r1, util._ARTIFACT_MARKER))
     util.persisted_artifact(spark, "k", sf, "fp1", build_factory("d"))
     assert builds == ["a", "d"]
     # a new fingerprint prunes the superseded one — no orphan dirs
-    util.memo_once_clear(spark)
+    util.memo_clear(spark)
     r2 = util.persisted_artifact(spark, "k", sf, "fp2", build_factory("e"))
     assert builds == ["a", "d", "e"]
     kind_dir = os.path.dirname(r2)
@@ -181,7 +181,7 @@ def test_persisted_artifact_prune_spares_live_tmp_builds(spark, tmp_path, monkey
     os.makedirs(stale)
     old = _time.time() - 7200
     os.utime(stale, (old, old))
-    util.memo_once_clear(spark)
+    util.memo_clear(spark)
     util.persisted_artifact(spark, "kp", sf, "fpB", build)
     entries = sorted(os.listdir(kind_dir))
     assert "fpB" in entries                 # new artifact published
@@ -212,20 +212,19 @@ def test_persisted_artifact_concurrent_builders_converge(spark, tmp_path, monkey
 
     def run():
         try:
-            # memo_once is keyed per (app, ...) and shared — clear a
-            # per-thread view by calling resolve through a fresh key
-            # path: use the public API but bypass the memo hit by
-            # clearing before each call in the main thread instead.
+            # the memo is keyed per (app, ...) and shared, so the main
+            # thread replaces util.memo with a pass-through below: both
+            # threads then run resolve and really race the publish.
             results.append(util.persisted_artifact(spark, "kc", sf, "fpX", build))
         except Exception as ex:  # pragma: no cover
             errors.append(ex)
 
     # defeat the memo so both threads really race the fs protocol
-    orig_memo = util.memo_once
-    monkeypatch.setattr(util, "memo_once", lambda _s, _k, fn: fn())
+    orig_memo = util.memo
+    monkeypatch.setattr(util, "memo", lambda _s, _k, _v, fn: fn())
     t1, t2 = threading.Thread(target=run), threading.Thread(target=run)
     t1.start(); t2.start(); t1.join(30); t2.join(30)
-    monkeypatch.setattr(util, "memo_once", orig_memo)
+    monkeypatch.setattr(util, "memo", orig_memo)
     assert not errors, errors
     assert len(set(results)) == 1
     root = results[0]

@@ -124,11 +124,12 @@ def perturb_sweep(
     """Run each query under every shuffle-partition setting and fail on
     any cross-setting result difference (Spark vs itself, no oracle).
 
-    The cache is cleared between settings so cache_once subtrees are
-    recomputed under the new partitioning — otherwise a cached result
-    from the first setting would mask instability in later ones.
-    memo_once artifacts (minhash edge parquet, textrank graph, trained
-    codebooks) are likewise forgotten per setting, so artifact BUILDS —
+    The cache is cleared between settings so memoized cached subtrees
+    are recomputed under the new partitioning — otherwise a cached
+    result from the first setting would mask instability in later
+    ones. Memoized and persisted artifacts (minhash edge parquet,
+    textrank graph, trained codebooks) are likewise forgotten per
+    setting (artifact_clear calls util.memo_clear), so artifact BUILDS —
     the heaviest shuffle-dependent subtrees — are also re-run under
     each partitioning instead of being built once under settings[0].
     """
@@ -149,8 +150,8 @@ def perturb_sweep(
             spark.conf.set("spark.sql.shuffle.partitions", str(p))
             spark.catalog.clearCache()
             # sf-scoped: a concurrent session on the OTHER fixture keeps
-            # its live artifacts (ADVICE r10)
-            artifact_clear(spark, sf_dir)  # also clears memo_once
+            # its live artifacts
+            artifact_clear(spark, sf_dir)  # also calls memo_clear
             try:
                 cur = normalize(qs[name](spark, sf_dir).toPandas())
             except Exception:
@@ -300,18 +301,17 @@ def main() -> int:
             # that is the point: driver-conf parity), so a full-registry
             # run must bound cross-query state accumulation the way the
             # real driver's 50-query windows do naturally. Without this,
-            # ~260 queries of cache_once/localCheckpoint blocks squeeze
-            # execution memory until a mid-registry task OOMs the JVM
-            # (r13: dedup_remove_spans died at query ~235 at sf0.1,
-            # while a fresh session runs it in 10 s). Disk-persisted
-            # artifacts are untouched — only session memory is released.
+            # ~260 queries of memoized cache/localCheckpoint blocks
+            # squeeze execution memory until a mid-registry task OOMs
+            # the JVM (dedup_remove_spans dies at query ~235 at sf0.1,
+            # while a fresh session runs it in 10 s). util.memo_clear
+            # releases them; disk-persisted artifacts are untouched —
+            # only session memory is released.
             from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import (
-                cache_once_clear,
-                memo_once_clear,
+                memo_clear,
             )
 
-            cache_once_clear(spark)
-            memo_once_clear(spark)
+            memo_clear(spark)
             spark.catalog.clearCache()
             # drop py4j refs to out-of-scope DataFrames so the JVM
             # ContextCleaner can reap their localCheckpoint blocks

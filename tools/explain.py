@@ -54,27 +54,23 @@ def main() -> int:
         print("give query names or --all; known:", ", ".join(sorted(registry)))
         return 1
     from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import (
-        cache_once_clear,
-        memo_once_clear,
+        memo_clear,
     )
 
     spark = get_spark("explain")
     lines = []
     for name in names:
-        # Evict cache_once AND memo_once state so every committed
+        # Evict every memo entry (util.memo_clear) so every committed
         # plan/budget is the COLD-session plan — the one a fresh
         # pytest/CI run sees. Warm caches change Catalyst's size
-        # estimates and can flip broadcast<->SMJ (VERDICT r6:
-        # dedup_clusters budget captured warm at 4 exchanges, measured
-        # cold at 6). Warm MEMOS change whether a driver-side training
-        # loop runs during plan construction, which decides whether a
-        # cache_once subtree is MATERIALIZED at plan time (r15:
-        # pack_token_bins_bpe planned 4 exchanges when bpe_merges was
-        # memoized — lazy vocab cache — and 5 when training re-ran and
-        # materialized it; memo FIFO eviction made that depend on
-        # registry order and artifact state, a budget-gate flake).
-        cache_once_clear(spark)
-        memo_once_clear(spark)
+        # estimates and can flip broadcast<->SMJ, so a budget captured
+        # warm can miss the cold plan. Warm MEMOS change whether a
+        # driver-side training loop runs during plan construction,
+        # which decides whether a memoized cached subtree is
+        # MATERIALIZED at plan time (pack_token_bins_bpe can plan one
+        # exchange fewer when bpe_merges is memoized — lazy vocab
+        # cache — than when training re-runs and materializes it).
+        memo_clear(spark)
         df = registry[name].fn(spark, args.sf)
         plan = df._jdf.queryExecution().executedPlan().toString()
         s = summarize(plan)
@@ -90,7 +86,7 @@ def main() -> int:
         header = (
             "# PLANS — physical-plan summary per registered query\n\n"
             "Auto-generated by `python tools/explain.py --all --write` at\n"
-            "sf0.01 (static plans, pre-AQE-finalization, COLD cache_once\n"
+            "sf0.01 (static plans, pre-AQE-finalization, COLD memo\n"
             "state per query — the plan a fresh session sees). Columns:\n"
             "shuffle exchanges, join strategies, aggregates, sorts,\n"
             "cartesian/BNLJ (allow-listed ones only), Python (Arrow)\n"

@@ -223,7 +223,7 @@ def main() -> None:
             # the duplicate graph replicates k-fold with UNCHANGED
             # component diameters: round count must stay constant and
             # per-round shuffle volume must scale linearly, i.e. a
-            # measured exponent ~1. (cache_once makes min-of-runs time
+            # measured exponent ~1. (the memo makes min-of-runs time
             # the propagation loop + cluster joins on a warm edge set —
             # the edge-build cost is dedup_minhash_pairs' own sweep row.)
             "dedup_clusters",
@@ -546,8 +546,7 @@ def main() -> None:
             bpe_merges_delta,
         )
         from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import (
-            cache_once_clear,
-            memo_once_clear,
+            memo_clear,
         )
 
         def bpe_fixture(k: int) -> str:
@@ -581,8 +580,7 @@ def main() -> None:
             return out
 
         def bpe_cold(trainer, d: str) -> None:
-            memo_once_clear(spark)
-            cache_once_clear(spark)
+            memo_clear(spark)
             trainer(spark, d)
 
         if want("text_bpe_merge_table_delta"):
