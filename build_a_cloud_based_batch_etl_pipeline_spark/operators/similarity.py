@@ -25,6 +25,8 @@ tests/test_similarity.py.
 
 from __future__ import annotations
 
+from collections import namedtuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1455,6 +1457,12 @@ def _adc_topk_stream(
 _IVFPQ_NLIST = 16
 _IVFPQ_NPROBE = 3
 
+
+def _n_probe(nprobe: int | None) -> int:
+    """Lists probed per query: the override, or _IVFPQ_NPROBE, capped
+    at the list count."""
+    return min(_IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe))
+
 # Hive-partition fan-out of the PERSISTED codes tables: pq_codes (and
 # each epoch partition) is written partitioned by
 # list_bucket = list_id % _PQ_LIST_BUCKETS, so a sharded serve whose
@@ -1557,9 +1565,8 @@ def _ivf_adc_topk_stream(
         emb = spread_small_input(emb, "vec_id", n_rows=n_queries)
     if index_mask is None:
         index_mask = np.ones(len(ids), dtype=bool)
-    n_probe = min(
-        _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
-    )
+    n_probe = _n_probe(nprobe)
+    block = _SHARD_Q_BLOCK
     b_all = spark.sparkContext.broadcast(
         (books, ids, codes, coarse, assign, index_mask, index_labels)
     )
@@ -1573,10 +1580,10 @@ def _ivf_adc_topk_stream(
         # inverted-list members grouped ONCE per task, so candidate
         # lookup is a concatenate of precomputed position arrays instead
         # of a per-query rescan of the whole index
-        members = [
-            np.flatnonzero((bucket_of == li) & eligible)
+        members = {
+            li: np.flatnonzero((bucket_of == li) & eligible)
             for li in range(len(cents))
-        ]
+        }
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -1585,28 +1592,12 @@ def _ivf_adc_topk_stream(
             qlabs = (
                 pdf["label"].to_numpy(dtype=np.int64) if labs is not None else None
             )
-            # one batched routing argsort: probe sets for every query
-            probes = np.argsort(-(q @ cents.T), axis=1)[:, :n_probe]
-            lut = vk.adc_lut(q, bk)
-            out_q, out_n, out_s = [], [], []
-            for bi in range(len(q)):
-                cand = np.concatenate([members[p] for p in probes[bi]])
-                cand = cand[index_ids[cand] != qids[bi]]
-                if labs is not None:
-                    cand = cand[labs[cand] == qlabs[bi]]
-                if not len(cand):
-                    continue
-                s = vk.adc_scores(lut[bi], index_codes[cand])
-                top = vk.topk_by_score_then_id(s, index_ids[cand], k)
-                out_q.extend([qids[bi]] * len(top))
-                out_n.extend(index_ids[cand[top]])
-                out_s.extend(np.round(s[top], 4))
+            qid, nid, s = vk.ivf_adc_topk(
+                q, qids, vk.ivf_probes(q, cents, n_probe), bk, members,
+                index_ids, index_codes, k, qlabs, labs, block,
+            )
             yield pd.DataFrame(
-                {
-                    "qid": np.array(out_q, dtype=np.int64),
-                    "nid": np.array(out_n, dtype=np.int64),
-                    "adc_score": np.array(out_s, dtype=np.float64),
-                }
+                {"qid": qid, "nid": nid.astype(np.int64), "adc_score": np.round(s, 4)}
             )
 
     return emb.mapInPandas(score, "qid long, nid long, adc_score double")
@@ -2501,23 +2492,14 @@ def _pq_purge_seq(spark: SparkSession, index_root: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Sharded IVF-PQ online serving: every path
-# above this block BROADCASTS the codes table (behind the loud
-# _MAX_INDEX_ROWS cap) and streams queries — right when queries are the
-# big side, wrong for serving against a 100-TB codes table. This block
-# inverts it, the inversion SCALE.md prescribes: the codes table STAYS a
-# DataFrame clustered by list_id (shards of whole inverted lists sized
-# to executor memory), the bounded QUERY batch broadcasts, each task
-# groups its lists once and runs the same LUT-ADC kernel over
-# shard-local candidates, and per-shard top-k winners reduce to the
-# global per-query top-k with one vocabulary-of-(Q x k x shards)-sized
-# window — no driver collect of a single code row, no cap on corpus
-# size. Selection order is the engine-wide (-score, nid) total order at
-# every stage, so the result is BIT-IDENTICAL to the broadcast path
-# (pinned in tests/test_similarity.py including with _MAX_INDEX_ROWS
-# forced below the corpus size). Reference: no vector surface
-# (SURVEY.md §2.2); the shard shape is FAISS's IVF sharding (Johnson et
-# al. 2017 §5) re-expressed as a DataFrame.
+# IVF-PQ online serving, two placements of one kernel
+# (vk.ivf_adc_topk) with bit-equal rows. Up to _MAX_INDEX_ROWS code
+# rows, the validated index is held on the driver and a request runs
+# no Spark job. Above it, the codes table stays a DataFrame clustered
+# by list_id, the bounded QUERY batch broadcasts, each task scores its
+# own lists and per-shard winners reduce to the global top-k in one
+# window: no cap on corpus size. The shard shape is FAISS's IVF
+# sharding (Johnson et al. 2017 §5) as a DataFrame.
 # ---------------------------------------------------------------------------
 
 # Cap on the QUERY batch a sharded search may broadcast (the mirror of
@@ -2526,9 +2508,24 @@ def _pq_purge_seq(spark: SparkSession, index_root: str) -> str:
 # its queries across several calls.
 _MAX_QUERY_ROWS = 100_000
 
-# Queries LUT-ed per block inside each task: bounds the transient
-# B x M x K table to ~16 MiB (1024 x 8 x 256 doubles) no matter how
-# large the broadcast batch is.
+
+def _query_rows(q_df: DataFrame | None, q_cols, q_rows: list | None = None):
+    """A serve call's query rows, collected from q_df when not given,
+    refused above _MAX_QUERY_ROWS."""
+    if q_rows is None:
+        q_rows = q_df.select(*q_cols).limit(_MAX_QUERY_ROWS + 1).collect()
+    if len(q_rows) > _MAX_QUERY_ROWS:
+        raise ValueError(
+            f"query batch exceeds the {_MAX_QUERY_ROWS}-row broadcast "
+            "cap — tile the queries across multiple sharded searches "
+            "via serve_ann_ivf_pq_tiled (the CODES side is unbounded "
+            "here; only the per-call query batch broadcasts)"
+        )
+    return q_rows
+
+# Queries LUT-ed per block by every IVF-ADC placement: bounds the
+# transient B x M x K table to ~16 MiB (1024 x 8 x 256 doubles) no
+# matter how large the query batch is.
 _SHARD_Q_BLOCK = 1024
 
 # Probe-set pruning only engages when the batch's probed-list union is
@@ -2647,7 +2644,6 @@ def ivf_pq_codes_df(
     include_epochs: bool = True,
     allow_drift: bool = False,
     floor: float = _PQ_DRIFT_FLOOR,
-    cluster: bool = True,
 ):
     """(codes DataFrame clustered by list_id, books, coarse) — the
     DISTRIBUTED twin of load_pq_index / load_pq_index_incremental: the
@@ -2677,6 +2673,25 @@ def ivf_pq_codes_df(
     partitions (a new epoch changes the name set; a committed one is
     never rewritten). The memo is per-application (util.memo), so a
     fresh serving process re-proves the invariants exactly once."""
+    st = _ivf_pq_state(spark, index_root, include_epochs, allow_drift, floor)
+    return _prepare_serve_codes(spark, st, None, None), st.books, st.coarse
+
+
+# One validated index state: the codes plan, its footer row count, the
+# codebooks and coarse centroids, and the memo key/stamp they live under.
+_PQState = namedtuple("_PQState", "codes n_codes books coarse root policy stamp")
+
+
+def _ivf_pq_state(
+    spark: SparkSession,
+    index_root: str,
+    include_epochs: bool = True,
+    allow_drift: bool = False,
+    floor: float = _PQ_DRIFT_FLOOR,
+) -> _PQState:
+    """The body of ivf_pq_codes_df before its spread: the per-call
+    staleness probe (footer-stat version, epoch listing, purge marker;
+    no job) and the stamp-memoized, validated codes plan."""
     books, coarse, version = load_pq_codebooks(spark, index_root)
     epochs = (
         _pq_epoch_partitions(spark, index_root) if include_epochs else ()
@@ -2739,25 +2754,7 @@ def ivf_pq_codes_df(
     codes, n_codes = memo(
         spark, ("ivf_pq_codes_plan", index_root, *policy), stamp, _build_codes
     )
-    # cluster shards by inverted list ONLY when the scan arrives
-    # under-split (spread_small_input's gate): the persisted layout is
-    # already hive-partitioned by list_bucket, scoring is correct for
-    # ANY sharding of the code rows (each shard emits its local top-k
-    # under the global (-score, nid) order and the window reduce merges
-    # — a list split across two shards contributes the same winners),
-    # so an unconditional repartition was a full codes-table shuffle
-    # per serve call that bought nothing at scale (guide §2.4). A
-    # small/under-split fixture still spreads across cores so the
-    # Python scorer parallelizes, capped by the footer row count so a
-    # fixture-sized table is not shredded into core-count crumbs;
-    # cluster=False lets a caller that
-    # restricts the candidate set (serve_ann_ivf_pq's eligible
-    # semi-join) defer the spread until after its join.
-    return (
-        spread_small_input(codes, "list_id", n_rows=n_codes)
-        if cluster
-        else codes
-    ), books, coarse
+    return _PQState(codes, n_codes, books, coarse, index_root, policy, stamp)
 
 
 def _pq_codes_row_count(
@@ -2804,19 +2801,8 @@ def _ivf_adc_score_sharded(
     tile; rows beyond index 1 (2 with label) are ignored."""
     import numpy as np
 
-    n_probe = min(
-        _IVFPQ_NLIST, _IVFPQ_NPROBE if nprobe is None else int(nprobe)
-    )
     q_cols = ["vec_id", "embedding"] + (["label"] if same_label else [])
-    if q_rows is None:
-        q_rows = q_df.select(*q_cols).limit(_MAX_QUERY_ROWS + 1).collect()
-    if len(q_rows) > _MAX_QUERY_ROWS:
-        raise ValueError(
-            f"query batch exceeds the {_MAX_QUERY_ROWS}-row broadcast "
-            "cap — tile the queries across multiple sharded searches "
-            "via serve_ann_ivf_pq_tiled (the CODES side is unbounded "
-            "here; only the per-call query batch broadcasts)"
-        )
+    q_rows = _query_rows(q_df, q_cols, q_rows)
     if not q_rows:
         # an empty request batch gets an empty result with the scoring
         # schema, matching the flat scorer (and never reaches the norm,
@@ -2831,18 +2817,10 @@ def _ivf_adc_score_sharded(
         if same_label
         else None
     )
-    # IVF routing runs ONCE, driver-side (the query batch and the
-    # NLIST x DIM centroids are both already here; the shards used to
-    # recompute the identical argsort each): besides dropping the
-    # redundant per-shard work, the union of probed lists becomes a
-    # PREDICATE on the codes table — list_bucket IN (...) prunes whole
-    # hive partitions at the scan and list_id IN (...) prunes row
-    # groups via parquet stats, so a sparse request batch
-    # (nprobe * |Q| << nlist) never opens unprobed lists' files.
-    # Bit-equality is untouched: candidates only ever come from probed
-    # lists.
-    qsim = qmat @ coarse.T
-    probes = np.argsort(-qsim, axis=1)[:, :n_probe]
+    # IVF routing runs once, on the driver, and the union of probed
+    # lists becomes a predicate on the codes table: list_bucket IN
+    # (...) prunes hive partitions, list_id IN (...) row groups.
+    probes = vk.ivf_probes(qmat, coarse, _n_probe(nprobe))
     probed = [int(x) for x in np.unique(probes)]
     if len(probed) <= _PRUNE_MAX_LISTS and len(probed) < coarse.shape[0]:
         # sparse probe set: prune. Dense batches (every list probed, or
@@ -2853,6 +2831,7 @@ def _ivf_adc_score_sharded(
             codes_df = codes_df.filter(F.col("list_bucket").isin(buckets))
         codes_df = codes_df.filter(F.col("list_id").isin(probed))
     b = spark.sparkContext.broadcast((books, qids, qmat, qlabs, probes))
+    block = _SHARD_Q_BLOCK
 
     def score_shard(batches):
         import pandas as pd
@@ -2877,50 +2856,21 @@ def _ivf_adc_score_sharded(
                 labs_l.append(pdf["label"].to_numpy(np.int64))
         if not ids_l:
             return
-        index_ids = np.concatenate(ids_l)
-        index_codes = np.concatenate(codes_l)
         bucket_of = np.concatenate(lists_l)
-        labs = np.concatenate(labs_l) if q_labs is not None else None
         members = {
             int(li): np.flatnonzero(bucket_of == li)
             for li in np.unique(bucket_of)
         }
-        # routing rides the broadcast (computed once on the driver,
-        # same batched argsort as the flat scorer)
-        for lo in range(0, len(q), _SHARD_Q_BLOCK):
-            hi = min(lo + _SHARD_Q_BLOCK, len(q))
-            lut = vk.adc_lut(q[lo:hi], bk)
-            out_q, out_n, out_s = [], [], []
-            for bi in range(lo, hi):
-                hit = [
-                    members[p] for p in probes[bi] if int(p) in members
-                ]
-                if not hit:
-                    continue
-                cand = np.concatenate(hit)
-                keep = index_ids[cand] != q_ids[bi]
-                if q_labs is not None:
-                    keep &= labs[cand] == q_labs[bi]
-                cand = cand[keep]
-                if not len(cand):
-                    continue
-                s = vk.adc_scores(lut[bi - lo], index_codes[cand])
-                # shard-local top-k under the SAME (-score, nid) total
-                # order as the final reduce: the global top-k is a
-                # subset of the union of shard top-ks, so the reduce
-                # loses nothing
-                top = vk.topk_by_score_then_id(s, index_ids[cand], k)
-                out_q.extend([q_ids[bi]] * len(top))
-                out_n.extend(index_ids[cand[top]])
-                out_s.extend(s[top])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.array(out_q, dtype=np.int64),
-                        "nid": np.array(out_n, dtype=np.int64),
-                        "score_raw": np.array(out_s, dtype=np.float64),
-                    }
-                )
+        # shard-local top-k under the SAME (-score, nid) total order as
+        # the final reduce: the global top-k is a subset of the union
+        # of shard top-ks, so the reduce loses nothing
+        qid, nid, s = vk.ivf_adc_topk(
+            q, q_ids, probes, bk, members, np.concatenate(ids_l),
+            np.concatenate(codes_l), k, q_labs,
+            np.concatenate(labs_l) if q_labs is not None else None, block,
+        )
+        if len(qid):
+            yield pd.DataFrame({"qid": qid, "nid": nid, "score_raw": s})
 
     return codes_df.mapInPandas(
         score_shard, "qid long, nid long, score_raw double"
@@ -2986,41 +2936,133 @@ def serve_ann_ivf_pq(
     label_of: DataFrame | None = None,
 ) -> DataFrame:
     """Online ANN serving against a persisted (optionally
-    epoch-appended) IVF-PQ index with the codes table DISTRIBUTED — the
-    entry point a query service calls per request batch. Composes the
-    distributed loader's refusal contract with the sharded scorer; the
-    only driver-side state is the O(M*K*SUB) codebooks and the bounded
-    query batch.
+    epoch-appended) IVF-PQ index — the entry point a query service
+    calls per request batch. Every call runs the loader's staleness
+    probe (and, on a new stamp, its refusal contract); then one of two
+    placements scores, with bit-equal rows:
+
+    - driver-resident (_resident_ivf_pq) when the footer count of
+      base+epoch codes is within _MAX_INDEX_ROWS and no filter is
+      given: the result is a local frame, and no job runs beyond
+      collecting q_df;
+    - sharded (_serve_sharded) otherwise.
 
     eligible: optional (vec_id) DataFrame restricting the candidate
-    side — the sharded twin of the flat path's index_mask (metadata
-    filtered search / two-corpus joins). Applied as a semi-join BEFORE
-    the list_id clustering, so shards hold only eligible codes and the
-    per-query path is unchanged (pre-filtered lists, never a
-    post-filtered top-k that under-fills k). At 100 TB this is a
-    predicate/join on the codes table — no driver-side mask array of
-    corpus length, which is how the flat path's mask would die at
-    scale. Callers compensate selectivity via `nprobe`, exactly like
-    the flat path (bit-equality with the flat filtered search pinned
-    in tests/test_similarity.py).
+    side, the sharded twin of the flat path's index_mask: a semi-join
+    before the list_id clustering, so lists are pre-filtered and never
+    under-fill k. Callers compensate selectivity via `nprobe`.
 
     label_of: optional (vec_id, label) DataFrame switching on the
-    PER-QUERY dynamic label filter (the flat scorer's index_labels
-    semantics at corpus scale): candidate
-    labels attach to the codes shards by join, query labels ride the
-    broadcast (q_df must then carry a `label` column), and each query
-    only matches candidates sharing its label. Callers scale `nprobe`
-    by the label count exactly like the flat path (bit-equality pinned
-    in tests/test_similarity.py)."""
-    codes_df, books, coarse = _prepare_serve_codes(
-        spark, index_root, include_epochs, allow_drift, eligible, label_of
+    per-query label filter (the flat scorer's index_labels): q_df then
+    carries a `label` column and each query only matches candidates
+    sharing it. Callers scale `nprobe` by the label count. Both filters
+    are pinned bit-equal to the flat path in tests/test_similarity.py."""
+    st = _ivf_pq_state(spark, index_root, include_epochs, allow_drift)
+    resident = (
+        _resident_ivf_pq(spark, st)
+        if eligible is None and label_of is None
+        else None
     )
+    if resident is None:
+        return _serve_sharded(spark, q_df, st, k, nprobe, eligible, label_of)
+    qid, nid, score = _resident_topk(
+        resident, _query_rows(q_df, ["vec_id", "embedding"]), k, nprobe
+    )
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame({"qid": qid, "nid": nid, "adc_score": score}),
+        "qid long, nid long, adc_score double",
+    )
+
+
+def serve_ann_ivf_pq_rows(
+    spark: SparkSession,
+    rows: list,
+    index_root: str,
+    k: int = 5,
+    nprobe: int | None = None,
+) -> list:
+    """serve_ann_ivf_pq for (vec_id, embedding) rows already on the
+    driver (the /ann route): (qid, nid, adc_score) tuples, with no
+    DataFrame on the resident placement, so a warm request runs no
+    Spark job. Over the cap the rows become a pandas-built query frame
+    for the sharded placement."""
+    st = _ivf_pq_state(spark, index_root)
+    resident = _resident_ivf_pq(spark, st)
+    if resident is not None:
+        out = _resident_topk(resident, _query_rows(None, None, rows), k, nprobe)
+        return list(zip(*(a.tolist() for a in out)))
+    import pandas as pd
+
+    q_df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [r[0] for r in rows],
+                      "embedding": [list(r[1]) for r in rows]}),
+        "vec_id long, embedding array<double>",
+    )
+    return [tuple(r) for r in _serve_sharded(spark, q_df, st, k, nprobe).collect()]
+
+
+def _resident_ivf_pq(spark: SparkSession, st: _PQState):
+    """(ids sorted, decoded codes, per-list member positions, books,
+    coarse) held on the driver, or None above _MAX_INDEX_ROWS or with an
+    unreadable footer count. One memo entry per index root and drift
+    policy, built by one collect of the validated codes plan and
+    replaced when the stamp (rebuild, new epoch, purge) changes."""
+    if st.n_codes is None or st.n_codes > _MAX_INDEX_ROWS:
+        return None
+
+    def build():
+        import numpy as np
+
+        pdf = st.codes.select("vec_id", "codes", "list_id").toPandas()
+        pdf = pdf.sort_values("vec_id", kind="stable")
+        lists = pdf["list_id"].to_numpy(np.int64)
+        members = {
+            int(li): np.flatnonzero(lists == li) for li in np.unique(lists)
+        }
+        ids = pdf["vec_id"].to_numpy(np.int64)
+        codes = _decode_hex_codes(list(pdf["codes"]))
+        return ids, codes, members, st.books, st.coarse
+
+    return memo(spark, ("ivf_pq_resident", st.root, *st.policy), st.stamp, build)
+
+
+def _resident_topk(resident, rows: list, k: int, nprobe: int | None):
+    """(qid, nid, adc_score) arrays for driver-side query rows against
+    a resident index: the shared kernel, rounded with the np.round of
+    np_round4 so the rows are bit-equal to the sharded reduce's."""
+    import numpy as np
+
+    ids, codes, members, books, coarse = resident
+    if not rows:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    q = vk.normalize(np.array([r[1] for r in rows], dtype=np.float64))
+    qids = np.array([r[0] for r in rows], dtype=np.int64)
+    qid, nid, s = vk.ivf_adc_topk(
+        q, qids, vk.ivf_probes(q, coarse, _n_probe(nprobe)), books, members,
+        ids, codes, k, block=_SHARD_Q_BLOCK,
+    )
+    return qid, nid, np.round(s, 4)
+
+
+def _serve_sharded(
+    spark: SparkSession,
+    q_df: DataFrame,
+    st: _PQState,
+    k: int = 5,
+    nprobe: int | None = None,
+    eligible: DataFrame | None = None,
+    label_of: DataFrame | None = None,
+) -> DataFrame:
+    """serve_ann_ivf_pq's sharded placement: the prepared codes side
+    composed with the sharded scorer and its window reduce."""
     return _ivf_adc_topk_sharded(
         spark,
-        codes_df,
+        _prepare_serve_codes(spark, st, eligible, label_of),
         q_df,
-        books,
-        coarse,
+        st.books,
+        st.coarse,
         k=k,
         nprobe=nprobe,
         same_label=label_of is not None,
@@ -3029,38 +3071,25 @@ def serve_ann_ivf_pq(
 
 def _prepare_serve_codes(
     spark: SparkSession,
-    index_root: str,
-    include_epochs: bool,
-    allow_drift: bool,
+    st: _PQState,
     eligible: DataFrame | None,
     label_of: DataFrame | None,
-):
+) -> DataFrame:
     """The candidate side of a sharded serve, shared by the one-batch
-    and tiled entry points: validated codes (loader memoizes the pass),
-    optional eligible semi-join / label attach, clustered by list_id."""
-    codes_df, books, coarse = ivf_pq_codes_df(
-        spark,
-        index_root,
-        include_epochs=include_epochs,
-        allow_drift=allow_drift,
-        cluster=eligible is None and label_of is None,
-    )
+    and tiled entry points: the validated codes plan, optional eligible
+    semi-join / label attach, clustered by list_id."""
+    codes_df = st.codes
     if eligible is not None:
         codes_df = codes_df.join(
             eligible.select("vec_id").distinct(), "vec_id", "left_semi"
         )
     if label_of is not None:
-        # distinct mirrors the eligible path: a label_of with
-        # duplicate (vec_id, label) rows would otherwise duplicate
-        # code rows AFTER the loader's vec_id-uniqueness probe already
-        # ran, yielding duplicate (qid, nid) candidates. Rows that
-        # duplicate a vec_id with CONFLICTING labels (labels must be a
-        # function of vec_id) are REFUSED by one aggregate probe
-        # memoized per index with label_of's analyzed plan as the
-        # version, so a service passing the same mapping per request
-        # batch pays it once per session. A plan does not fingerprint
-        # content: a caller that mutates the data UNDER an identical
-        # plan re-probes only after memo_clear or a restart.
+        # distinct: duplicate (vec_id, label) rows would duplicate code
+        # rows after the loader's uniqueness probe. A vec_id with two
+        # labels is refused by one aggregate, memoized per index with
+        # label_of's analyzed plan as version (a plan does not
+        # fingerprint content: data mutated under the same plan is
+        # re-probed only after memo_clear or a restart).
         labs = label_of.select("vec_id", "label").distinct()
         plan = label_of._jdf.queryExecution().analyzed().toString()
 
@@ -3076,25 +3105,13 @@ def _prepare_serve_codes(
                 )
             return True
 
-        memo(spark, ("label_of_unique", index_root), plan, _probe_labels)
+        memo(spark, ("label_of_unique", st.root), plan, _probe_labels)
         codes_df = codes_df.join(labs, "vec_id")
-    if eligible is not None or label_of is not None:
-        # same gate as the no-filter path: the join output is correct
-        # under any sharding; spread only an under-split result. The
-        # footer count of the unfiltered codes caps the spread (an
-        # upper bound on the join output — the filters only shrink it)
-        codes_df = spread_small_input(
-            codes_df,
-            "list_id",
-            n_rows=_pq_codes_row_count(
-                spark,
-                index_root,
-                _pq_epoch_partitions(spark, index_root)
-                if include_epochs
-                else (),
-            ),
-        )
-    return codes_df, books, coarse
+    # spread only an under-split scan (spread_small_input's gate, capped
+    # by the unfiltered footer count, an upper bound on what the filters
+    # leave): scoring is correct under any sharding of the code rows,
+    # and the persisted layout is already partitioned by list_bucket
+    return spread_small_input(codes_df, "list_id", n_rows=st.n_codes)
 
 
 def serve_ann_ivf_pq_tiled(
@@ -3173,9 +3190,9 @@ def serve_ann_ivf_pq_tiled(
     # on the per-request-batch latency path.
     q_df = q_df.localCheckpoint(eager=False)
     n = q_df.count()
-    codes_df, books, coarse = _prepare_serve_codes(
-        spark, index_root, include_epochs, allow_drift, eligible, label_of
-    )
+    st = _ivf_pq_state(spark, index_root, include_epochs, allow_drift)
+    codes_df = _prepare_serve_codes(spark, st, eligible, label_of)
+    books, coarse = st.books, st.coarse
     same_label = label_of is not None
     if n <= limit:
         return _ivf_adc_topk_sharded(
@@ -3417,26 +3434,17 @@ def _serve_tiles(
 
 @query("embed_ann_ivf_pq_sharded")
 def embed_ann_ivf_pq_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ serving with the CODES SIDE DISTRIBUTED (rows-only: PQ
-    code arithmetic is not SQL-expressible; bit-equality with
-    embed_ann_ivf_pq_indexed — and therefore with the session-trained
-    embed_ann_ivf_pq and its recall pins — is pinned in
-    tests/test_similarity.py, including with _MAX_INDEX_ROWS forced
-    below the corpus size so the flat loader REFUSES while this path
-    answers): the persisted codes table stays a DataFrame clustered by
-    list_id, the bounded query batch broadcasts, each shard scores its
-    own inverted lists with the shared LUT-ADC kernel, and per-shard
-    winners reduce to the global per-query top-k under the engine-wide
-    (-score, nid) order.
-
-    Scale shape: this is the serving inversion SCALE.md prescribes for
-    100 TB — corpus size is unbounded (no _read_index_rows driver
-    collect anywhere on the path), shards hold whole inverted lists,
-    and the reduce input is |Q| x k x nshards rows, independent of
-    corpus size. Reference: no vector surface (SURVEY.md §2.2)."""
+    """IVF-PQ serving on the sharded placement, whatever the index size
+    (rows-only: PQ code arithmetic is not SQL-expressible). Its rows
+    equal embed_ann_ivf_pq_indexed's, pinned in tests/test_similarity.py
+    also with _MAX_INDEX_ROWS below the corpus size, where the flat
+    loader refuses: the codes table stays a DataFrame clustered by
+    list_id, the query batch broadcasts, each shard scores its own
+    lists and a window reduce keeps the global (-score, nid) top-k.
+    Corpus size is unbounded; the reduce input is |Q| x k x nshards."""
     root = _pq_index_artifact(spark, sf_dir)
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return serve_ann_ivf_pq(spark, emb, root)
+    return _serve_sharded(spark, emb, _ivf_pq_state(spark, root))
 
 
 @query("embed_ann_ivf_pq_tiled")

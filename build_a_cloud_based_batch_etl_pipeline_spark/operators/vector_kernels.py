@@ -6,6 +6,9 @@ the Python workers inside their mapInPandas/applyInPandas closures).
 - adc_lut                 per-query PQ lookup table, LUT[b, m, k]
 - adc_scores              asymmetric-distance scores of PQ codes via the LUT
 - topk_by_score_then_id   the engine's one (-score, id) top-k tie contract
+- ivf_probes              the nprobe nearest coarse lists of each query
+- ivf_adc_topk            the per-query IVF-ADC top-k loop of every
+                          IVF-PQ placement (flat, sharded, resident)
 
 Parameters that tests vary (chunk sizes, code width) are arguments, never
 module globals here: a worker imports this module fresh, so a global
@@ -66,3 +69,43 @@ def topk_by_score_then_id(scores, ids, k, exclude=None):
         perm = np.argsort(ids, kind="stable")
         return perm[topk_by_score_then_id(scores[..., perm], ids[perm], k)]
     return np.argsort(-scores, axis=-1, kind="stable")[..., :k]
+
+
+def ivf_probes(q, coarse, nprobe):
+    """(b, nprobe) coarse-list ids of each normalized query, nearest
+    first: one batched argsort over the query-centroid similarities."""
+    return np.argsort(-(q @ coarse.T), axis=1)[:, :nprobe]
+
+
+def ivf_adc_topk(q, qids, probes, books, members, ids, codes, k,
+                 qlabs=None, labs=None, block=1024):
+    """Per-query IVF-ADC top-k: (qid, nid, score) arrays, best first per
+    query, scores unrounded.
+
+    members maps a list id to positions into ids/codes/labs; a probed
+    list it lacks (another shard's) adds nothing. Query bi scores its
+    probed lists' members minus its own id (and, with labels, only
+    labs == qlabs[bi]) through one LUT per `block` queries, which
+    bounds the block x M x K table, and keeps topk_by_score_then_id."""
+    out_q, out_n, out_s = [], [], []
+    for lo in range(0, len(q), block):
+        lut = adc_lut(q[lo : lo + block], books)
+        for bi in range(lo, min(lo + block, len(q))):
+            hit = [members[p] for p in probes[bi] if p in members]
+            if not hit:
+                continue
+            cand = np.concatenate(hit)
+            keep = ids[cand] != qids[bi]
+            if labs is not None:
+                keep &= labs[cand] == qlabs[bi]
+            cand = cand[keep]
+            if not len(cand):
+                continue
+            s = adc_scores(lut[bi - lo], codes[cand])
+            top = topk_by_score_then_id(s, ids[cand], k)
+            out_q.append(np.full(len(top), qids[bi], dtype=np.int64))
+            out_n.append(ids[cand[top]])
+            out_s.append(s[top])
+    if not out_q:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    return np.concatenate(out_q), np.concatenate(out_n), np.concatenate(out_s)

@@ -1,6 +1,6 @@
 """HTTP service surface: the reference's Cloud Function handlers as a
-stdlib ``http.server`` app over the same job steps (VERDICT r6 item 7 —
-literal R8 parity, not just the CLI analog).
+stdlib ``http.server`` app over the same job steps, with the handlers'
+own routes and envelopes, not only the CLI analog.
 
 Reference behavior mirrored exactly (src/extract/main.py:57-76,
 src/load/main.py:58-84):
@@ -23,16 +23,22 @@ src/load/main.py:58-84):
 - ``POST /pipeline`` — one full tick (extract then load); engine
   extension with the same envelope contract.
 - ``POST /ann`` — the serving entry point for the persisted IVF-PQ
-  index (VERDICT r15 item 6 — R8 parity for the QUERY side; the
-  reference delegates all querying to BigQuery and has no vector
-  surface, SURVEY.md §2.2). Body::
+  index. The reference hands all querying to BigQuery and has no
+  vector surface (SURVEY.md §2.2); this route is the engine's query
+  side. Body::
 
       {"index_root": ..., "queries": [{"vec_id": N, "embedding":
        [...]}, ...], "k": 5, "nprobe": null}
 
-  drives operators.similarity.serve_ann_ivf_pq — index validation is
-  memoized per (version, epoch set, purge seq), so steady-state
-  requests pay load+score only. 200 with ``{"success": true,
+  drives operators.similarity.serve_ann_ivf_pq_rows with the parsed
+  rows, after the per-request index staleness probe (footer-stat
+  version, epoch listing, purge marker; no job). Placement: with at
+  most ``similarity._MAX_INDEX_ROWS`` base+epoch code rows the index is
+  driver-resident and a warm request runs 0 Spark jobs; above it the
+  sharded scorer runs, with the query batch broadcast. The resident
+  index is one memo entry per index root and drift policy, replaced on
+  the first request after the stamp (index version, epoch set, purge
+  sequence) changes. 200 with ``{"success": true,
   "results": [{"qid": ..., "nid": ..., "adc_score": ...}, ...]}``;
   400 with the standard envelope on a malformed body (missing/ragged
   queries, non-numeric k) and on an over-cap batch — that one names
@@ -184,20 +190,13 @@ def make_handler(
                     return
                 root, rows, k, nprobe = parsed
                 try:
-                    from .operators.similarity import serve_ann_ivf_pq
+                    from .operators.similarity import serve_ann_ivf_pq_rows
 
-                    q_df = spark.createDataFrame(
-                        rows, "vec_id long, embedding array<double>"
-                    )
                     out = [
-                        {
-                            "qid": r.qid,
-                            "nid": r.nid,
-                            "adc_score": r.adc_score,
-                        }
-                        for r in serve_ann_ivf_pq(
-                            spark, q_df, root, k=k, nprobe=nprobe
-                        ).collect()
+                        {"qid": q, "nid": n, "adc_score": s}
+                        for q, n, s in serve_ann_ivf_pq_rows(
+                            spark, rows, root, k=k, nprobe=nprobe
+                        )
                     ]
                 except Exception as exc:  # serve refusals -> 500 envelope
                     self._reply(500, {"success": False, "error": str(exc)})

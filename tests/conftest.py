@@ -33,7 +33,6 @@ SLOW_TESTS = {
     "test_pq_incremental_loader_includes_epochs_over_file_uri",  # 40 s
     "test_cache_once_queries_plan_identically_cold_and_warm",  # 38 s
     "test_asof_join_forward_and_tolerance_match_bruteforce",  # 22 s
-    "test_pq_purge_stops_serving_and_is_replay_safe",  # 21 s
     "test_bpe_canonical_merge_three_engines",  # 21 s
     "test_pq_index_build_load_query_contract",  # 20 s
 }

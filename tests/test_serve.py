@@ -134,10 +134,12 @@ def ann_index(spark, sf_dir):
     )
 
 
-def test_ann_route_serves_topk(server, ann_index, spark):
-    """POST /ann (VERDICT r15 item 6 — the query-side service surface):
-    a bounded query batch returns the same (qid, nid, adc_score) rows
-    serve_ann_ivf_pq computes, through a real socket."""
+def test_ann_route_serves_topk(server, ann_index, spark, monkeypatch):
+    """POST /ann, the query-side service surface: a bounded query batch
+    returns, through a real socket, the same (qid, nid, adc_score) rows
+    serve_ann_ivf_pq computes on either placement — driver-resident
+    (the fixture index is under _MAX_INDEX_ROWS) and sharded (the cap
+    forced below the corpus)."""
     from build_a_cloud_based_batch_etl_pipeline_spark.operators import (
         similarity as sim,
     )
@@ -168,6 +170,55 @@ def test_ann_route_serves_topk(server, ann_index, spark):
         for r in sim.serve_ann_ivf_pq(spark, q_df, root, k=3).collect()
     )
     assert got == want and got
+
+    monkeypatch.setattr(sim, "_MAX_INDEX_ROWS", 10)
+    out = sim.serve_ann_ivf_pq(spark, q_df, root, k=3)
+    assert "LocalTableScan" not in out._jdf.queryExecution().executedPlan().toString()
+    assert sorted((r.qid, r.nid, r.adc_score) for r in out.collect()) == want
+    # the route's over-cap fallback answers the same
+    status, env = _post(f"{base}/ann", body)
+    assert status == 200
+    assert sorted((r["qid"], r["nid"], r["adc_score"]) for r in env["results"]) == want
+
+
+def test_ann_route_warm_requests_run_no_spark_job(server, ann_index, spark):
+    """A resident index answers warm /ann requests on the driver: the
+    Spark job count does not move across them. The first request after
+    a memo clear builds the resident index, which shows the counter sees
+    the handler thread's jobs."""
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators.util import (
+        memo_clear,
+    )
+
+    base, _cfg = server
+    root, emb = ann_index
+    qrows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(8).collect()
+    body = json.dumps(
+        {
+            "index_root": root,
+            "queries": [
+                {"vec_id": r.vec_id, "embedding": list(r.embedding)}
+                for r in qrows
+            ],
+        }
+    ).encode()
+    sc = spark.sparkContext
+
+    def last_job() -> int:
+        # the newest job id, not the count: the status store evicts old
+        # jobs past spark.ui.retainedJobs, so a count can stand still
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    memo_clear(spark)
+    before = last_job()
+    assert _post(f"{base}/ann", body)[0] == 200
+    cold = last_job()
+    assert cold > before
+    for _ in range(5):
+        status, env = _post(f"{base}/ann", body)
+        assert status == 200 and len(env["results"]) == 8 * 5
+    assert last_job() == cold
 
 
 def test_ann_route_malformed_and_overcap_are_400(server, ann_index, monkeypatch):

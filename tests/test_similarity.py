@@ -1368,7 +1368,7 @@ def test_pq_serving_validates_once_per_index_state(
 
 
 def test_sharded_probe_set_prunes_partitions_and_stays_bit_equal(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Probed-list pruning is real, not asserted (VERDICT r14 item 2):
     pq_codes persists hive-partitioned by list_bucket = list_id %
@@ -1405,6 +1405,8 @@ def test_sharded_probe_set_prunes_partitions_and_stays_bit_equal(
         [(v, e) for v, e, _l in rows[:1]],
         "vec_id long, embedding array<float>",
     )
+    # the index is under the resident cap: force the sharded placement
+    monkeypatch.setattr(sim, "_MAX_INDEX_ROWS", 10)
     out = sim.serve_ann_ivf_pq(spark, q, root, k=3, nprobe=2)
     got = sorted((r.qid, r.nid, r.adc_score) for r in out.collect())
     assert got
@@ -1455,6 +1457,121 @@ def test_sharded_probe_set_prunes_partitions_and_stays_bit_equal(
         ).collect()
     )
     assert got == want
+
+
+def _placement_rows(df):
+    """(qid, nid, adc_score) rows in (qid, nid) order, NaN as None so a
+    zero query's NaN scores compare equal."""
+    return sorted(
+        ((r.qid, r.nid, None if r.adc_score != r.adc_score else r.adc_score)
+         for r in df.collect()),
+        key=lambda t: t[:2],
+    )
+
+
+def test_resident_and_sharded_placements_are_bit_equal(
+    spark, tmp_path, monkeypatch
+):
+    """serve_ann_ivf_pq's two placements return equal (qid, nid,
+    adc_score) rows on seeded random batches over a base+epoch index:
+    nprobe overrides, k larger than a probed list, a zero query vector
+    and a query whose id is in the corpus (self-exclusion)."""
+    import os
+
+    import numpy as np
+
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators import (
+        similarity as sim,
+    )
+
+    sf = str(tmp_path / "sfdir")
+    os.makedirs(sf)
+    rows = _mk_gauss_corpus(spark, sf, 300, seed=71)
+    root = str(tmp_path / "pq_placement_root")
+    sim.build_pq_index(spark, sf, root)
+    rng = np.random.RandomState(72)
+    sim.append_pq_epoch(
+        spark,
+        spark.createDataFrame(
+            [(7000 + i, rng.randn(64).tolist()) for i in range(30)],
+            "vec_id long, embedding array<double>",
+        ),
+        root, "batch", 1,
+    )
+    # 330 codes over 16 lists (~21 a list): at nprobe=1, k=40 exceeds
+    # the probed list
+    for seed, k, nprobe in ((1, 5, None), (2, 40, 1), (3, 3, 16)):
+        rng = np.random.RandomState(seed)
+        batch = [(9000 + i, rng.randn(64).tolist()) for i in range(12)]
+        batch.append((9100, [0.0] * 64))
+        v, e, _l = rows[rng.randint(len(rows))]
+        batch.append((v, [x + 1e-3 for x in e]))
+        q = spark.createDataFrame(batch, "vec_id long, embedding array<double>")
+        resident = sim.serve_ann_ivf_pq(spark, q, root, k=k, nprobe=nprobe)
+        assert "LocalTableScan" in (
+            resident._jdf.queryExecution().executedPlan().toString()
+        )
+        with monkeypatch.context() as m:
+            m.setattr(sim, "_MAX_INDEX_ROWS", 10)
+            sharded = sim.serve_ann_ivf_pq(spark, q, root, k=k, nprobe=nprobe)
+            want = _placement_rows(sharded)
+        got = _placement_rows(resident)
+        assert got == want and got
+        if nprobe == 1:
+            per_q = [sum(1 for t in got if t[0] == qid) for qid, _e in batch]
+            assert min(per_q) < k
+        assert all(n != v for qid, n, _s in got if qid == v)
+        assert any(s is None for qid, _n, s in got if qid == 9100)
+
+
+def test_resident_index_follows_epoch_appends_without_memo_clear(
+    spark, tmp_path
+):
+    """A served index that gains an epoch answers from it on the next
+    call in the same session: the epoch listing is in the stamp, so the
+    resident entry is rebuilt in place — one entry per index root."""
+    import os
+
+    import numpy as np
+
+    from build_a_cloud_based_batch_etl_pipeline_spark.operators import (
+        similarity as sim,
+        util,
+    )
+
+    sf = str(tmp_path / "sfdir")
+    os.makedirs(sf)
+    _mk_gauss_corpus(spark, sf, 300, seed=81)
+    root = str(tmp_path / "pq_resident_epoch_root")
+    sim.build_pq_index(spark, sf, root)
+    rng = np.random.RandomState(82)
+    vecs = [rng.randn(64).tolist() for _ in range(10)]
+    q = spark.createDataFrame(
+        [(20_000 + i, v) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def entries():
+        return [
+            key for key in util._MEMO
+            if key[1] == "ivf_pq_resident" and key[2] == root
+        ]
+
+    before = {r.nid for r in sim.serve_ann_ivf_pq(spark, q, root).collect()}
+    assert before and all(n < 300 for n in before)
+    assert len(entries()) == 1
+    sim.append_pq_epoch(
+        spark,
+        spark.createDataFrame(
+            [(10_000 + i, v) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<double>",
+        ),
+        root, "batch", 1,
+    )
+    after = {r.nid for r in sim.serve_ann_ivf_pq(spark, q, root).collect()}
+    # each query's own vector is now in the index, under a new id
+    assert {10_000 + i for i in range(10)} <= after
+    assert len(entries()) == 1
 
 
 def test_sharded_empty_query_batch_returns_empty(spark, sf_dir):

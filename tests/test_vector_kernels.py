@@ -105,3 +105,51 @@ def test_chunked_flat_adc_equals_unchunked():
         assert flat(chunk) == whole
     assert all(len(row) == k for row in whole)
     assert all(n != qid for row, qid in zip(whole, qids) for n, _ in row)
+
+
+def test_ivf_adc_topk_equals_brute_force_and_shards():
+    """The per-query IVF-ADC loop: each query's top k over its probed
+    lists (minus itself, within its label) equals a brute-force scan of
+    those candidates, for every LUT block size; and splitting the lists
+    across two shards, each with the lists it holds, then keeping the
+    top k of the union loses nothing."""
+    q, books, codes = _books_codes(n=200)
+    rng = np.random.RandomState(11)
+    ids = np.sort(rng.choice(10_000, len(codes), replace=False))
+    lists = rng.randint(0, 6, len(codes))
+    labs = rng.randint(0, 2, len(codes))
+    coarse = vk.normalize(rng.randn(6, q.shape[1]))
+    qids = np.array([ids[3], 10_001, ids[50], 10_002, 10_003])
+    qlabs = np.array([0, 1, 1, 0, 1])
+    probes = vk.ivf_probes(q, coarse, 2)
+    members = {li: np.flatnonzero(lists == li) for li in range(6)}
+    lut = vk.adc_lut(q, books)
+    k = 7
+    for qlab, lab in ((None, None), (qlabs, labs)):
+        want = []
+        for b in range(len(q)):
+            ok = np.isin(lists, probes[b]) & (ids != qids[b])
+            if lab is not None:
+                ok &= lab == qlab[b]
+            s = vk.adc_scores(lut[b], codes[ok])
+            top = np.lexsort((ids[ok], -s))[:k]
+            want += [(int(qids[b]), int(ids[ok][t]), s[t]) for t in top]
+        for block in (1, 2, 1024):
+            got = vk.ivf_adc_topk(
+                q, qids, probes, books, members, ids, codes, k, qlab, lab, block
+            )
+            assert list(zip(*(a.tolist() for a in got))) == want
+        shards = []
+        for held in ({0, 2, 4}, {1, 3, 5}):
+            rows = np.flatnonzero(np.isin(lists, list(held)))
+            sub = {li: np.flatnonzero(lists[rows] == li) for li in held}
+            qid, nid, s = vk.ivf_adc_topk(
+                q, qids, probes, books, sub, ids[rows], codes[rows], k,
+                qlab, None if lab is None else lab[rows],
+            )
+            shards += list(zip(qid.tolist(), nid.tolist(), s.tolist()))
+        merged = []
+        for b in qids.tolist():
+            mine = sorted((t for t in shards if t[0] == b), key=lambda t: (-t[2], t[1]))
+            merged += mine[:k]
+        assert merged == want

@@ -444,76 +444,72 @@ def main() -> None:
             }
             print_partial(results)
 
-        # r14: the sharded ANN serving path (VERDICT r13's demand).
-        # |Q| is FIXED (200 vectors) while the corpus replicates, so
-        # the measured exponent isolates the serving architecture's
-        # corpus term: each task groups its own shard's lists once
-        # (linear in shard size) and scores |Q| x nprobe probed lists
-        # (~|Q| x nprobe x N/nlist candidates — linear in N at the
-        # fixture's CONSTANT nlist; the production nlist ~ N rule,
-        # measured at e~0.1 by the embed_ann_ivf row, would make the
-        # per-query term constant). The reduce is |Q| x k x nshards
-        # rows, corpus-independent. Run 1 pays the one-time index
-        # build (driver-bounded training + distributed encode);
-        # min-of-runs measures the warm serving path a request batch
-        # pays.
-        from build_a_cloud_based_batch_etl_pipeline_spark.operators.similarity import (
-            build_pq_index,
-            serve_ann_ivf_pq,
+        # The serving rows, once per placement. serve_ann_ivf_pq holds
+        # an index of at most _MAX_INDEX_ROWS code rows on the driver,
+        # which every fixture here is; the cap is the one placement
+        # switch, so each row pins it: 0 forces the sharded scorer
+        # (codes a list_id-clustered DataFrame, query batch broadcast,
+        # window reduce), sys.maxsize the driver-resident one.
+        #
+        # Corpus axis: |Q| FIXED at 200 while the corpus replicates, so
+        # the exponent isolates the corpus term. Sharded, each task
+        # groups its own lists once and scores |Q| x nprobe probed
+        # lists (~|Q| x nprobe x N/nlist candidates: linear in N at the
+        # fixture's CONSTANT nlist; the production nlist ~ N rule would
+        # make the per-query term constant); the reduce is |Q| x k x
+        # nshards rows. Resident, the same candidates are scored on the
+        # driver after one collect per index version. Run 1 pays the
+        # one-time index build; min-of-runs is the warm request.
+        #
+        # Query axis: corpus FIXED (the x1 fixture and its index), |Q|
+        # = 200 x p. Per-query work is nprobe lists x a constant list
+        # size plus, sharded, the |Q| x k x nshards reduce: linear in
+        # |Q| (the 1024-query LUT block bounds memory, not time).
+        from build_a_cloud_based_batch_etl_pipeline_spark.operators import (
+            similarity as sim,
         )
 
-        if want("serve_ann_ivf_pq"):
+        def serve_placed(placement: str, root_p: int, n_q: int) -> None:
+            root = os.path.join(workdir, f"srv_idx_x{root_p}")
+            sim.build_pq_index(spark, fixture[root_p], root)  # warm: skips
+            q = (
+                tbl(spark, fixture[root_p], "embeddings")
+                .select("vec_id", "embedding")
+                .orderBy("vec_id")
+                .limit(n_q)
+            )
+            saved = sim._MAX_INDEX_ROWS
+            sim._MAX_INDEX_ROWS = 0 if placement == "sharded" else sys.maxsize
+            try:
+                materialize(sim.serve_ann_ivf_pq(spark, q, root))
+            finally:
+                sim._MAX_INDEX_ROWS = saved
 
-            def serve_run(p: int) -> None:
-                root = os.path.join(workdir, f"srv_idx_x{p}")
-                build_pq_index(spark, fixture[p], root)  # warm: skips
-                q = (
-                    tbl(spark, fixture[p], "embeddings")
-                    .select("vec_id", "embedding")
-                    .orderBy("vec_id")
-                    .limit(200)
-                )
-                materialize(serve_ann_ivf_pq(spark, q, root))
-
-            ts = {
-                str(p): timed(lambda: serve_run(p), args.runs)
-                for p in points
-            }
-            results["serve_ann_ivf_pq(sharded, |Q|=200, nlist const)"] = {
-                "t": ts, "exponent": fit_exponent(points, ts)
-            }
-            print_partial(results)
-
-        # r15 (VERDICT r14 item 8): the OTHER serving axis — corpus
-        # FIXED (the x1 fixture + its already-built index), |Q| scaled
-        # 200 x p. The r14 row proved the corpus term (e=0.02 at fixed
-        # |Q|); this row confirms the query term the reduce shape
-        # predicts — per-query work is nprobe probed lists x constant
-        # list size plus the |Q| x k x nshards reduce, both LINEAR in
-        # |Q| (the 1024-query LUT block bounds transient memory, not
-        # time). e >> 1 here would mean the broadcast/LUT path hides a
-        # super-linear query term the fixed-|Q| row could never see.
-        if want("serve_ann_ivf_pq_qscale"):
-
-            def serve_q_run(p: int) -> None:
-                root = os.path.join(workdir, "srv_idx_x1")
-                build_pq_index(spark, fixture[1], root)  # warm: skips
-                q = (
-                    tbl(spark, fixture[1], "embeddings")
-                    .select("vec_id", "embedding")
-                    .orderBy("vec_id")
-                    .limit(200 * p)
-                )
-                materialize(serve_ann_ivf_pq(spark, q, root))
-
-            ts = {
-                str(p): timed(lambda: serve_q_run(p), args.runs)
-                for p in points
-            }
-            results["serve_ann_ivf_pq_qscale(sharded, corpus fixed, |Q|=200xp)"] = {
-                "t": ts, "exponent": fit_exponent(points, ts)
-            }
-            print_partial(results)
+        for placement in ("sharded", "resident"):
+            if want("serve_ann_ivf_pq"):
+                ts = {
+                    str(p): timed(
+                        lambda: serve_placed(placement, p, 200), args.runs
+                    )
+                    for p in points
+                }
+                results[
+                    f"serve_ann_ivf_pq({placement}, |Q|=200, nlist const)"
+                ] = {"t": ts, "exponent": fit_exponent(points, ts)}
+                print_partial(results)
+            if want("serve_ann_ivf_pq_qscale"):
+                ts = {
+                    str(p): timed(
+                        lambda: serve_placed(placement, 1, 200 * p),
+                        args.runs,
+                    )
+                    for p in points
+                }
+                results[
+                    f"serve_ann_ivf_pq_qscale({placement}, corpus fixed, "
+                    "|Q|=200xp)"
+                ] = {"t": ts, "exponent": fit_exponent(points, ts)}
+                print_partial(results)
 
         # r14 (VERDICT r13 item 4): the delta-maintained BPE trainer.
         # The shared suffixed-copy fixture is unusable here twice over:
