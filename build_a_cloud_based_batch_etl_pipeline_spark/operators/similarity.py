@@ -76,6 +76,18 @@ def _decode_hex_codes(hex_codes):
     return buf.reshape(len(hex_codes), _PQ_M)
 
 
+def _index_layout(ids, hex_codes, lists):
+    """(ids, decoded codes, list ids) ordered by vec_id: the one
+    driver-side IVF-PQ index layout, shared by the flat loaders and the
+    resident serving placement."""
+    import numpy as np
+
+    ids = np.asarray(ids, dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    codes = _decode_hex_codes([hex_codes[i] for i in order])
+    return ids[order], codes, np.asarray(lists, dtype=np.int64)[order]
+
+
 def _parquet_num_rows(path: str, spark: SparkSession | None = None) -> int | None:
     """Total row count from parquet footer metadata (file or directory
     tree of part files) — driver-side and O(files), no Spark job. None
@@ -2031,8 +2043,6 @@ def load_pq_index(spark: SparkSession, sf_dir: str, index_root: str):
     fingerprint across all three tables (the staleness column VERDICT
     r5 asked for, enforced rather than advisory). Bounded by the same
     footer guard as the in-session path."""
-    import numpy as np
-
     stored = _stored_index_version(spark, index_root)
     live = pq_index_version(sf_dir, spark)
     if stored is None:
@@ -2063,10 +2073,7 @@ def load_pq_index(spark: SparkSession, sf_dir: str, index_root: str):
     rows = _read_index_rows(
         spark, index_root, "pq_codes", ["vec_id", "codes", "list_id"]
     )
-    rows.sort(key=lambda r: r[0])
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    codes = _decode_hex_codes([r[1] for r in rows])
-    assign = np.array([r[2] for r in rows], dtype=np.int64)
+    ids, codes, assign = _index_layout(*([r[i] for r in rows] for i in range(3)))
     return books, ids, codes, coarse, assign
 
 
@@ -2276,8 +2283,6 @@ def load_pq_index_incremental(
     by design — its freshness contract is 'base + committed epochs
     cover the ingested corpus', enforced by the maintainer's
     exactly-once epoch commits, not by re-fingerprinting."""
-    import numpy as np
-
     from ..fsio import Fs
 
     books, coarse, version = load_pq_codebooks(spark, index_root)
@@ -2342,10 +2347,7 @@ def load_pq_index_incremental(
             "duplicate vec_id across base+epochs — an id was re-ingested; "
             "the append-only index contract requires globally unique ids"
         )
-    rows.sort(key=lambda r: r[0])
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    codes = _decode_hex_codes([r[1] for r in rows])
-    assign = np.array([r[2] for r in rows], dtype=np.int64)
+    ids, codes, assign = _index_layout(*([r[i] for r in rows] for i in range(3)))
     return books, ids, codes, coarse, assign
 
 
@@ -2699,10 +2701,14 @@ def _ivf_pq_state(
     stamp = (
         version,
         epochs,
-        # purge marker: a same-name purge rewrite changes row content
-        # without changing the epoch name set, so the sequence file is
-        # the stamp's only view of it (purge_pq_index bumps it)
+        # a same-name purge rewrite keeps the epoch names: the purge
+        # marker and the codes tables' file fingerprints both see it,
+        # the latter also when a purge crashed before its marker write
         _pq_purge_seq(spark, index_root),
+        table_fingerprint(f"{index_root}/pq_codes", spark),
+        table_fingerprint(f"{index_root}/pq_codes_epochs", spark)
+        if epochs
+        else None,
     )
 
     def _build_codes():
@@ -2904,12 +2910,13 @@ def _ivf_adc_reduce_topk(part: DataFrame, k: int = 5) -> DataFrame:
 def _ivf_adc_topk_sharded(
     spark: SparkSession,
     codes_df: DataFrame,
-    q_df: DataFrame,
+    q_df: DataFrame | None,
     books,
     coarse,
     k: int = 5,
     nprobe: int | None = None,
     same_label: bool = False,
+    q_rows: list | None = None,
 ) -> DataFrame:
     """IVF-routed ADC top-k with the CODES side distributed: the
     sharded scoring pass (_ivf_adc_score_sharded) composed with the
@@ -2918,7 +2925,7 @@ def _ivf_adc_topk_sharded(
     return _ivf_adc_reduce_topk(
         _ivf_adc_score_sharded(
             spark, codes_df, q_df, books, coarse,
-            k=k, nprobe=nprobe, same_label=same_label,
+            k=k, nprobe=nprobe, same_label=same_label, q_rows=q_rows,
         ),
         k=k,
     )
@@ -2926,7 +2933,7 @@ def _ivf_adc_topk_sharded(
 
 def serve_ann_ivf_pq(
     spark: SparkSession,
-    q_df: DataFrame,
+    q_df: DataFrame | None,
     index_root: str,
     include_epochs: bool = True,
     allow_drift: bool = False,
@@ -2934,18 +2941,24 @@ def serve_ann_ivf_pq(
     nprobe: int | None = None,
     eligible: DataFrame | None = None,
     label_of: DataFrame | None = None,
+    q_rows: list | None = None,
 ) -> DataFrame:
     """Online ANN serving against a persisted (optionally
     epoch-appended) IVF-PQ index — the entry point a query service
     calls per request batch. Every call runs the loader's staleness
-    probe (and, on a new stamp, its refusal contract); then one of two
-    placements scores, with bit-equal rows:
+    probe (and, on a new stamp, its refusal contract) and collects the
+    query batch to the driver; then one of two placements scores, with
+    bit-equal rows:
 
     - driver-resident (_resident_ivf_pq) when the footer count of
-      base+epoch codes is within _MAX_INDEX_ROWS and no filter is
-      given: the result is a local frame, and no job runs beyond
+      base+epoch codes is within _MAX_INDEX_ROWS, the batch's candidate
+      count is within _RESIDENT_MAX_CANDIDATES and no filter is given:
+      the result is a pandas-built local frame, so no job runs beyond
       collecting q_df;
     - sharded (_serve_sharded) otherwise.
+
+    q_rows: (vec_id, embedding[, label]) rows already on the driver
+    (the /ann route) in place of q_df: a resident call runs no job.
 
     eligible: optional (vec_id) DataFrame restricting the candidate
     side, the sharded twin of the flat path's index_mask: a semi-join
@@ -2957,72 +2970,62 @@ def serve_ann_ivf_pq(
     carries a `label` column and each query only matches candidates
     sharing it. Callers scale `nprobe` by the label count. Both filters
     are pinned bit-equal to the flat path in tests/test_similarity.py."""
+    import pandas as pd
+
     st = _ivf_pq_state(spark, index_root, include_epochs, allow_drift)
+    same_label = label_of is not None
+    rows = _query_rows(
+        q_df, ["vec_id", "embedding"] + (["label"] if same_label else []), q_rows
+    )
     resident = (
-        _resident_ivf_pq(spark, st)
-        if eligible is None and label_of is None
+        _resident_ivf_pq(spark, st, len(rows), nprobe)
+        if eligible is None and not same_label
         else None
     )
     if resident is None:
-        return _serve_sharded(spark, q_df, st, k, nprobe, eligible, label_of)
-    qid, nid, score = _resident_topk(
-        resident, _query_rows(q_df, ["vec_id", "embedding"]), k, nprobe
-    )
-    import pandas as pd
-
+        return _serve_sharded(
+            spark, None, st, k, nprobe, eligible, label_of, rows
+        )
+    qid, nid, score = _resident_topk(resident, rows, k, nprobe)
     return spark.createDataFrame(
         pd.DataFrame({"qid": qid, "nid": nid, "adc_score": score}),
         "qid long, nid long, adc_score double",
     )
 
 
-def serve_ann_ivf_pq_rows(
-    spark: SparkSession,
-    rows: list,
-    index_root: str,
-    k: int = 5,
-    nprobe: int | None = None,
-) -> list:
-    """serve_ann_ivf_pq for (vec_id, embedding) rows already on the
-    driver (the /ann route): (qid, nid, adc_score) tuples, with no
-    DataFrame on the resident placement, so a warm request runs no
-    Spark job. Over the cap the rows become a pandas-built query frame
-    for the sharded placement."""
-    st = _ivf_pq_state(spark, index_root)
-    resident = _resident_ivf_pq(spark, st)
-    if resident is not None:
-        out = _resident_topk(resident, _query_rows(None, None, rows), k, nprobe)
-        return list(zip(*(a.tolist() for a in out)))
-    import pandas as pd
-
-    q_df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [r[0] for r in rows],
-                      "embedding": [list(r[1]) for r in rows]}),
-        "vec_id long, embedding array<double>",
-    )
-    return [tuple(r) for r in _serve_sharded(spark, q_df, st, k, nprobe).collect()]
+# Candidate budget of one driver-resident request (|Q| x code rows x
+# nprobe / nlist ADC scores): resident scoring uses one driver core,
+# the sharded scorer every core after ~0.7 s of job overhead. Measured
+# crossover on a 4-core host, both placements forced and warm: ~6.5M
+# at 100k code rows (|Q| ~350), ~7.4M at 20k (tools/scale_sweep.py
+# --only serve_ann_ivf_pq_nearcap).
+_RESIDENT_MAX_CANDIDATES = 6_000_000
 
 
-def _resident_ivf_pq(spark: SparkSession, st: _PQState):
+def _resident_ivf_pq(
+    spark: SparkSession, st: _PQState, n_q: int, nprobe: int | None
+):
     """(ids sorted, decoded codes, per-list member positions, books,
-    coarse) held on the driver, or None above _MAX_INDEX_ROWS or with an
-    unreadable footer count. One memo entry per index root and drift
-    policy, built by one collect of the validated codes plan and
-    replaced when the stamp (rebuild, new epoch, purge) changes."""
+    coarse) held on the driver, or None (sharded placement) above
+    either cap or with an unreadable footer count. One memo entry per
+    index root and drift policy, built by one collect of the validated
+    codes plan and replaced when the stamp changes."""
     if st.n_codes is None or st.n_codes > _MAX_INDEX_ROWS:
+        return None
+    nlist = st.coarse.shape[0]
+    if n_q * st.n_codes * _n_probe(nprobe) > _RESIDENT_MAX_CANDIDATES * nlist:
         return None
 
     def build():
         import numpy as np
 
         pdf = st.codes.select("vec_id", "codes", "list_id").toPandas()
-        pdf = pdf.sort_values("vec_id", kind="stable")
-        lists = pdf["list_id"].to_numpy(np.int64)
+        ids, codes, lists = _index_layout(
+            pdf["vec_id"], list(pdf["codes"]), pdf["list_id"]
+        )
         members = {
             int(li): np.flatnonzero(lists == li) for li in np.unique(lists)
         }
-        ids = pdf["vec_id"].to_numpy(np.int64)
-        codes = _decode_hex_codes(list(pdf["codes"]))
         return ids, codes, members, st.books, st.coarse
 
     return memo(spark, ("ivf_pq_resident", st.root, *st.policy), st.stamp, build)
@@ -3048,12 +3051,13 @@ def _resident_topk(resident, rows: list, k: int, nprobe: int | None):
 
 def _serve_sharded(
     spark: SparkSession,
-    q_df: DataFrame,
+    q_df: DataFrame | None,
     st: _PQState,
     k: int = 5,
     nprobe: int | None = None,
     eligible: DataFrame | None = None,
     label_of: DataFrame | None = None,
+    q_rows: list | None = None,
 ) -> DataFrame:
     """serve_ann_ivf_pq's sharded placement: the prepared codes side
     composed with the sharded scorer and its window reduce."""
@@ -3066,6 +3070,7 @@ def _serve_sharded(
         k=k,
         nprobe=nprobe,
         same_label=label_of is not None,
+        q_rows=q_rows,
     )
 
 

@@ -30,15 +30,18 @@ src/load/main.py:58-84):
       {"index_root": ..., "queries": [{"vec_id": N, "embedding":
        [...]}, ...], "k": 5, "nprobe": null}
 
-  drives operators.similarity.serve_ann_ivf_pq_rows with the parsed
-  rows, after the per-request index staleness probe (footer-stat
-  version, epoch listing, purge marker; no job). Placement: with at
-  most ``similarity._MAX_INDEX_ROWS`` base+epoch code rows the index is
-  driver-resident and a warm request runs 0 Spark jobs; above it the
-  sharded scorer runs, with the query batch broadcast. The resident
-  index is one memo entry per index root and drift policy, replaced on
-  the first request after the stamp (index version, epoch set, purge
-  sequence) changes. 200 with ``{"success": true,
+  drives operators.similarity.serve_ann_ivf_pq with the parsed rows
+  (no query DataFrame), after the per-request index staleness probe
+  (footer-stat version, epoch listing, purge marker, codes-file
+  fingerprints; no job). Placement: with at most
+  ``similarity._MAX_INDEX_ROWS`` base+epoch code rows, and a batch
+  that scores at most ``similarity._RESIDENT_MAX_CANDIDATES`` codes
+  (|Q| x rows x nprobe / nlist), the index is driver-resident and a
+  warm request runs 0 Spark jobs; otherwise the sharded scorer runs,
+  with the query batch broadcast. The resident index is one memo
+  entry per index root and drift policy, replaced on the first
+  request after the stamp (index version, epoch set, purge sequence,
+  codes-file fingerprints) changes. 200 with ``{"success": true,
   "results": [{"qid": ..., "nid": ..., "adc_score": ...}, ...]}``;
   400 with the standard envelope on a malformed body (missing/ragged
   queries, non-numeric k) and on an over-cap batch — that one names
@@ -190,13 +193,13 @@ def make_handler(
                     return
                 root, rows, k, nprobe = parsed
                 try:
-                    from .operators.similarity import serve_ann_ivf_pq_rows
+                    from .operators.similarity import serve_ann_ivf_pq
 
                     out = [
-                        {"qid": q, "nid": n, "adc_score": s}
-                        for q, n, s in serve_ann_ivf_pq_rows(
-                            spark, rows, root, k=k, nprobe=nprobe
-                        )
+                        {"qid": r.qid, "nid": r.nid, "adc_score": r.adc_score}
+                        for r in serve_ann_ivf_pq(
+                            spark, None, root, k=k, nprobe=nprobe, q_rows=rows
+                        ).collect()
                     ]
                 except Exception as exc:  # serve refusals -> 500 envelope
                     self._reply(500, {"success": False, "error": str(exc)})

@@ -104,6 +104,38 @@ def test_pq_purge_stops_serving_and_is_replay_safe(spark, sf_dir, pq_root):
     assert sim._pq_purge_seq(spark, pq_root) == "1"
 
 
+def test_pq_purge_without_marker_bump_still_drops_resident_index(
+    spark, sf_dir, pq_root
+):
+    """A purge that crashed after its swaps but before the purge marker
+    write leaves the marker where it was; a replay then removes 0 rows
+    and writes none. The driver-resident index must still stop serving
+    the purged ids on the next warm call: the stamp carries the codes
+    tables' file fingerprints, which the swaps changed."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q_rows = [
+        (r.vec_id, list(r.embedding))
+        for r in emb.orderBy("vec_id").limit(25).collect()
+    ]
+
+    def served():
+        out = sim.serve_ann_ivf_pq(spark, None, pq_root, q_rows=q_rows)
+        assert "LocalTableScan" in (
+            out._jdf.queryExecution().executedPlan().toString()
+        )
+        return {r.nid for r in out.collect()}
+
+    victims = sorted(served())[:3]  # warms the resident index
+    keys = spark.createDataFrame([(v,) for v in victims], "vec_id long")
+    assert sim.purge_pq_index(spark, pq_root, keys) == len(victims)
+    os.remove(f"{pq_root}/purge_seq")  # the marker write never happened
+    assert sim._pq_purge_seq(spark, pq_root) == "0"
+    assert sim.purge_pq_index(spark, pq_root, keys) == 0
+
+    nids = served()
+    assert nids and not (nids & set(victims))
+
+
 def test_pq_purge_emptied_epoch_partition_is_dropped(spark, sf_dir, pq_root):
     eps = spark.read.parquet(f"{pq_root}/pq_codes_epochs")
     all_ep_keys = eps.select("vec_id")

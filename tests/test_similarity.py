@@ -1475,7 +1475,8 @@ def test_resident_and_sharded_placements_are_bit_equal(
     """serve_ann_ivf_pq's two placements return equal (qid, nid,
     adc_score) rows on seeded random batches over a base+epoch index:
     nprobe overrides, k larger than a probed list, a zero query vector
-    and a query whose id is in the corpus (self-exclusion)."""
+    and a query whose id is in the corpus (self-exclusion). A batch
+    over the candidate budget moves to the sharded placement."""
     import os
 
     import numpy as np
@@ -1522,6 +1523,19 @@ def test_resident_and_sharded_placements_are_bit_equal(
             assert min(per_q) < k
         assert all(n != v for qid, n, _s in got if qid == v)
         assert any(s is None for qid, _n, s in got if qid == 9100)
+
+    # the batch's candidate count bounds the resident placement too:
+    # 330 codes x nprobe 3 / 16 lists ~ 62 a query, so a budget of 100
+    # keeps one query resident and sends two to the sharded scorer
+    monkeypatch.setattr(sim, "_RESIDENT_MAX_CANDIDATES", 100)
+    for n_q, local in ((1, True), (2, False)):
+        out = sim.serve_ann_ivf_pq(spark, None, root, q_rows=batch[:n_q])
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("LocalTableScan" in plan) == local
+    want = _placement_rows(out)
+    monkeypatch.setattr(sim, "_RESIDENT_MAX_CANDIDATES", 10**9)
+    resident = sim.serve_ann_ivf_pq(spark, None, root, q_rows=batch[:2])
+    assert _placement_rows(resident) == want and want
 
 
 def test_resident_index_follows_epoch_appends_without_memo_clear(

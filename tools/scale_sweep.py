@@ -445,11 +445,12 @@ def main() -> None:
             print_partial(results)
 
         # The serving rows, once per placement. serve_ann_ivf_pq holds
-        # an index of at most _MAX_INDEX_ROWS code rows on the driver,
-        # which every fixture here is; the cap is the one placement
-        # switch, so each row pins it: 0 forces the sharded scorer
-        # (codes a list_id-clustered DataFrame, query batch broadcast,
-        # window reduce), sys.maxsize the driver-resident one.
+        # an index of at most _MAX_INDEX_ROWS code rows on the driver
+        # while the batch scores at most _RESIDENT_MAX_CANDIDATES codes,
+        # which every fixture here does; each row pins the switch:
+        # _MAX_INDEX_ROWS = 0 forces the sharded scorer (codes a
+        # list_id-clustered DataFrame, query batch broadcast, window
+        # reduce), both caps at sys.maxsize the driver-resident one.
         #
         # Corpus axis: |Q| FIXED at 200 while the corpus replicates, so
         # the exponent isolates the corpus term. Sharded, each task
@@ -469,6 +470,17 @@ def main() -> None:
             similarity as sim,
         )
 
+        def serve_forced(placement: str, root: str, q=None, q_rows=None):
+            saved = sim._MAX_INDEX_ROWS, sim._RESIDENT_MAX_CANDIDATES
+            if placement == "sharded":
+                sim._MAX_INDEX_ROWS = 0
+            else:
+                sim._MAX_INDEX_ROWS = sim._RESIDENT_MAX_CANDIDATES = sys.maxsize
+            try:
+                sim.serve_ann_ivf_pq(spark, q, root, q_rows=q_rows).collect()
+            finally:
+                sim._MAX_INDEX_ROWS, sim._RESIDENT_MAX_CANDIDATES = saved
+
         def serve_placed(placement: str, root_p: int, n_q: int) -> None:
             root = os.path.join(workdir, f"srv_idx_x{root_p}")
             sim.build_pq_index(spark, fixture[root_p], root)  # warm: skips
@@ -478,12 +490,7 @@ def main() -> None:
                 .orderBy("vec_id")
                 .limit(n_q)
             )
-            saved = sim._MAX_INDEX_ROWS
-            sim._MAX_INDEX_ROWS = 0 if placement == "sharded" else sys.maxsize
-            try:
-                materialize(sim.serve_ann_ivf_pq(spark, q, root))
-            finally:
-                sim._MAX_INDEX_ROWS = saved
+            serve_forced(placement, root, q=q)
 
         for placement in ("sharded", "resident"):
             if want("serve_ann_ivf_pq"):
@@ -509,6 +516,61 @@ def main() -> None:
                     f"serve_ann_ivf_pq_qscale({placement}, corpus fixed, "
                     "|Q|=200xp)"
                 ] = {"t": ts, "exponent": fit_exponent(points, ts)}
+                print_partial(results)
+
+        # Near the resident cap: the fixtures above stop at 20k code
+        # rows, so this row writes its own seeded 100k-vector index (64
+        # gaussian clusters, 64 dims) and times both placements on warm
+        # driver-side query batches of growing |Q| (the /ann route's
+        # input; no query frame). The crossover sets
+        # similarity._RESIDENT_MAX_CANDIDATES; "exponent" is the slope
+        # over |Q|.
+        if want("serve_ann_ivf_pq_nearcap"):
+            import numpy as np
+            import pandas as pd
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            n_cap = 100_000
+            cap_dir = os.path.join(workdir, "nearcap")
+            os.makedirs(cap_dir)
+            rng = np.random.default_rng(7)
+            lab = rng.integers(0, 64, n_cap)
+            vecs = rng.standard_normal((64, 64))[lab] + 0.6 * (
+                rng.standard_normal((n_cap, 64))
+            )
+            pq.write_table(
+                pa.Table.from_pandas(
+                    pd.DataFrame(
+                        {
+                            "vec_id": np.arange(n_cap, dtype=np.int64),
+                            "embedding": list(vecs.astype(np.float32)),
+                            "label": lab.astype(np.int32),
+                        }
+                    ),
+                    preserve_index=False,
+                ),
+                os.path.join(cap_dir, "embeddings.parquet"),
+            )
+            cap_root = os.path.join(workdir, "nearcap_idx")
+            sim.build_pq_index(spark, cap_dir, cap_root)
+            cap_rows = [(i, vecs[i].tolist()) for i in range(4096)]
+            qs = [8, 64, 256, 1024, 4096]
+            for placement in ("sharded", "resident"):
+                serve_forced(placement, cap_root, q_rows=cap_rows[:8])  # warm
+                ts = {
+                    str(n_q): timed(
+                        lambda: serve_forced(
+                            placement, cap_root, q_rows=cap_rows[:n_q]
+                        ),
+                        args.runs,
+                    )
+                    for n_q in qs
+                }
+                results[
+                    f"serve_ann_ivf_pq_nearcap({placement}, 100k codes, "
+                    "|Q|=8..4096)"
+                ] = {"t": ts, "exponent": fit_exponent(qs, ts)}
                 print_partial(results)
 
         # r14 (VERDICT r13 item 4): the delta-maintained BPE trainer.
